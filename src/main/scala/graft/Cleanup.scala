@@ -36,9 +36,12 @@ object Cleanup {
     * dropped reference (which across a long suite may be never — the
     * round-2 bench-contamination root cause). Non-blocking: the
     * executors reclaim asynchronously while the next round runs. */
-  def freeCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+  def freeCheckpoint(df: org.apache.spark.sql.DataFrame): Unit = freeCheckpoint(df, blocking = false)
+
+  /** [[freeCheckpoint]], optionally waiting until the blocks are gone. */
+  private[graft] def freeCheckpoint(df: org.apache.spark.sql.DataFrame, blocking: Boolean): Unit =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking)
       case _ => ()
     }
 }

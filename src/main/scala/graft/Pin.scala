@@ -1,13 +1,22 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Eager plan pinning for the iterative / staged operator family — the
   * single place the library's `localCheckpoint(true)` idiom lives, and
   * the FAULT-TOLERANCE CONTRACT for every operator that uses it
-  * (connected-components rounds, the ANN beam walk and k-NN graph
-  * refinement, BPE merge rounds, the band-sequential MinHash jobs, the
-  * two-phase distributed rank, the streaming fold-ins).
+  * (connected-components rounds, k-NN graph refinement, BPE merge
+  * rounds, the band-sequential MinHash jobs, the two-phase distributed
+  * rank, the streaming fold-ins).
+  *
+  * [[rounds]] is THE ROUND POLICY: every fixed-round loop pins and
+  * releases its rounds through it — label propagation (`wc_lpa`,
+  * `ann_graph_cluster`), the beam walk (`ann_graph_search`,
+  * `ann_graph_search_pq`, the beam calibration probe), `wc_bfs`,
+  * `wc_sssp`, `wc_kcore` and the perceptron epochs (`text_train`).
+  * Those operators free their own intermediates; only the returned
+  * frame remains for the caller. The convergence loops
+  * (`Dedup.connectedComponents`, `minhashClusters`) keep their own.
   *
   * Why pin at all: each iteration of these operators consumes its own
   * output. Un-truncated, the logical plan doubles per round — analysis
@@ -55,6 +64,33 @@ object Pin {
       if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
       ds.checkpoint(eager = true)
     case None => ds.localCheckpoint(eager = true)
+  }
+
+  /** `n` rounds of `step` from `init` (round 0), then `finish` over the
+    * last round. Each round is [[eager]]`(step(prev, i))`, so plan depth
+    * stays constant and the checkpoint-dir switch applies unchanged; the
+    * round it supersedes is freed at once (round 0 too, if the caller
+    * pinned it). The result is `finish(last)`, pinned, after which the
+    * last round is freed with a blocking release. Under
+    * `SPARK_GRAFT_EXPLAIN_ROUND` each round's executed plan goes to
+    * stderr as `[tag] round i`; `tag` is the operator's query key. */
+  def rounds(tag: String, init: DataFrame, n: Int)(step: (DataFrame, Int) => DataFrame)
+            (finish: DataFrame => DataFrame): DataFrame = {
+    val explain = sys.env.contains("SPARK_GRAFT_EXPLAIN_ROUND")
+    var cur = init
+    for (i <- 1 to n) {
+      val round = step(cur, i)
+      val next = eager(round)
+      if (explain) {
+        System.err.println(s"[$tag] round $i (post-execution):")
+        System.err.println(round.queryExecution.executedPlan.toString)
+      }
+      Cleanup.freeCheckpoint(cur)
+      cur = next
+    }
+    val res = eager(finish(cur))
+    Cleanup.freeCheckpoint(cur, blocking = true)
+    res
   }
 
   /** [[eager]] as a postfix — the drop-in spelling at call sites. */

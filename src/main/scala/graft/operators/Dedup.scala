@@ -559,10 +559,6 @@ object Dedup {
   def minhashClustersLS(docs: DataFrame): DataFrame =
     connectedComponents(docs.select(col("doc_id")), minhashCandidates(docs))
 
-  /** See [[graft.Cleanup.freeCheckpoint]] — shared by every iterative
-    * operator that supersedes `localCheckpoint(true)` rounds. */
-  private def freeCheckpoint(df: DataFrame): Unit = graft.Cleanup.freeCheckpoint(df)
-
   /** Large-star/small-star connected components over ANY pair relation
     * (doc_a, doc_b) — reusable for whatever candidate generator produced
     * the pairs (MinHash bands, embedding buckets, explicit edges). */
@@ -618,7 +614,7 @@ object Dedup {
     while (!stable) {
       val next = smallStar(largeStar(edges)).pinned
       val nextStats = edgeStats(next)
-      freeCheckpoint(edges) // superseded round's blocks, freed eagerly
+      graft.Cleanup.freeCheckpoint(edges) // superseded round's blocks, freed eagerly
       edges = next
       stable = nextStats == prevStats
       prevStats = nextStats

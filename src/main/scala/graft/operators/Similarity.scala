@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Pin, Tables}
 import graft.Pin.PinOps
 import graft.functions.LshImpl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1069,7 +1069,9 @@ object Similarity {
 
   /** The refined ranked edge list (vec_id, rank, neighbor_id) —
     * [[nnDescent]] without the output sort, shared with the
-    * query-time graph traversal [[graphSearch]]. */
+    * query-time graph traversal [[graphSearch]]. Returned pinned; the
+    * build's own pinned and cached intermediates are freed before it
+    * returns. */
   private[graft] def nnDescentEdges(em: DataFrame, k: Int = KnnK,
                                     alpha: Option[Double] = AlphaRng,
                                     hop2Bands: Int = graft.Dials.nndHop2Bands): DataFrame = {
@@ -1095,20 +1097,20 @@ object Similarity {
     // the whole frame into one partition (a Spark WARN per run) on the
     // exact ×100 path this build runs. RangePartitioner orders
     // partitions by key, so base+local ≡ the global rank.
+    // PINNED before fan-out (ADVICE r14): the (id, pid) frame feeds
+    // TWO branches below — the per-pid counts and the per-row local
+    // ranks — and spark_partition_id() is only meaningful if both
+    // branches observe the SAME physical partitioning. Exchange/stage
+    // reuse usually guarantees that, but it is an optimization, not a
+    // contract: an AQE re-plan of one branch would misalign the base
+    // offsets and silently corrupt the rank→id table. localCheckpoint
+    // materializes the pid assignment once, so both branches read the
+    // identical blocks.
+    val ids = em.select(col("vec_id").as("neighbor_id"))
+      .repartitionByRange(col("neighbor_id"))
+      .withColumn("pid", spark_partition_id())
+      .pinned
     val ranked = {
-      // PINNED before fan-out (ADVICE r14): the (id, pid) frame feeds
-      // TWO branches below — the per-pid counts and the per-row local
-      // ranks — and spark_partition_id() is only meaningful if both
-      // branches observe the SAME physical partitioning. Exchange/stage
-      // reuse usually guarantees that, but it is an optimization, not a
-      // contract: an AQE re-plan of one branch would misalign the base
-      // offsets and silently corrupt the rank→id table. localCheckpoint
-      // materializes the pid assignment once, so both branches read the
-      // identical blocks (freed by the suite-level releaseAll).
-      val ids = em.select(col("vec_id").as("neighbor_id"))
-        .repartitionByRange(col("neighbor_id"))
-        .withColumn("pid", spark_partition_id())
-        .pinned
       val wLocal = Window.partitionBy("pid").orderBy("neighbor_id")
       val wBases = Window.orderBy("pid")
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -1191,7 +1193,7 @@ object Similarity {
       l.select(col("vec_id"), col("neighbor_id").as("mid"), col("v"))
         .join(r.select(col("vec_id").as("mid"), col("neighbor_id"), col("nv")), "mid")
         .select(col("vec_id"), col("neighbor_id"), cosine(col("v"), col("nv")).as("cos"))
-    if (bands <= 1) {
+    val res = if (bands <= 1) {
       // the fat frame exists ONLY on this single-pass path (gate/×100
       // tiers) — the banded path below never materializes it.
       // MATERIALIZED EAGERLY before the fan-out (r17, VERDICT r16 #9):
@@ -1212,7 +1214,9 @@ object Similarity {
         // knnEdges fusion note; duplicate (a, b) rows score identically
         .repartition(col("vec_id"))
         .dropDuplicates()
-      alphaPrune(scored, qv, k, alpha)
+      val out = alphaPrune(scored, qv, k, alpha).pinned
+      gv.unpersist(false)
+      out
     } else {
       val nvf = qv.select(col("vec_id").as("neighbor_id"), col("v").as("nv"))
       // ALL THREE candidate classes fold through the band loop — the
@@ -1274,13 +1278,13 @@ object Similarity {
         acc = next
       }
       System.gc() // reap the last band before the keep step's own jobs
-      // pin the keep step's output so the LAST band's accumulator (and
-      // its lineage) frees eagerly too (ADVICE r15) — only the refined
-      // edge list survives the build
-      val res = alphaPrune(acc, qv, k, alpha).pinned
+      val out = alphaPrune(acc, qv, k, alpha).pinned
       graft.Cleanup.freeCheckpoint(acc)
-      res
+      out
     }
+    // only the refined edge list survives the build
+    Seq(ids, g).foreach(graft.Cleanup.freeCheckpoint)
+    res
   }
 
   /** The KEEP step over a scored candidate frame
@@ -1420,9 +1424,8 @@ object Similarity {
     * edge frame, producing ≤ |Q|·Beam·(deg+1) skinny candidates, then
     * one vector attach by id and the native grouped top-k cut; the
     * corpus is NEVER scanned per query (the whole point vs
-    * `ann_bruteforce`'s n·q); rounds fixed → static plan depth; each
-    * round persists and releases its predecessor (the `wc_lpa` cache
-    * rule). The oracle unrolls the identical rounds as CTEs over the
+    * `ann_bruteforce`'s n·q); rounds fixed → static plan depth. The
+    * oracle unrolls the identical rounds as CTEs over the
     * shared NN-descent graph chain. Recall vs exact is a dial of
     * (Beam, BeamRounds, graph degree) — measured in the spec AND in
     * `graft.RecallSweep` (§5c-r12); the defaults are the corpus-derived
@@ -1431,28 +1434,38 @@ object Similarity {
     * the survey. */
   def graphSearch(em: DataFrame, beam: Int = Beam, rounds: Int = BeamRounds,
                   degree: Int = GraphDegree, queryBands: Int = 0): DataFrame = {
-    // persist the refined lists BEFORE symmetrizing: the union's two
-    // branches otherwise each re-execute the whole nn-descent build
-    // (Spark reuses no common subtree across union branches — measured
-    // 2× the build cost at 100×)
-    val g = nnDescentEdges(em, degree).select(col("vec_id"), col("neighbor_id")).persist()
-    val ge = symmetrized(g)
     val cvc = candVecs(em)
+    val res = withGraph(em, beam, degree, queryBands) { (ge, qv, entry, bands) =>
+      val exact = cosineScored(cvc, qv) _
+      beamTraverse("ann_graph_search", ge, entry, beam, rounds, bands)(exact)(exact)
+    }
+    cvc.unpersist(false)
+    res
+  }
+
+  /** The set-up both graph searches share: the refined graph at
+    * `degree` and its [[symmetrized]] edges, the query vectors
+    * (query_id, qv), the [[entrySeeds]] and the query-band count, handed
+    * to `walk(ge, qv, entry, bands)`; all are freed once `walk` returns
+    * its pinned result. Query bands (r16, VERDICT r15 #1) derive from
+    * the RESOLVED beam — the adversarial geometry's calibrated ~√n beam
+    * is exactly when the per-round exchange out-sizes scratch; |Q| is
+    * estimated from the recorded corpus size (uninitialized specs pass
+    * bands explicitly or stay at 1). */
+  private def withGraph(em: DataFrame, beam: Int, degree: Int, queryBands: Int)
+                       (walk: (DataFrame, DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
+    val built = nnDescentEdges(em, degree)
+    val ge = symmetrized(built.select(col("vec_id"), col("neighbor_id")))
     val qv = corpusVecs(em).where(col("vec_id") % QueryStride === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
       .persist()
-    val entry = entrySeeds(em, qv)
-    // query bands (r16, VERDICT r15 #1): derived from the RESOLVED beam
-    // — the adversarial geometry's calibrated ~√n beam is exactly when
-    // the per-round exchange out-sizes scratch; |Q| estimated from the
-    // recorded corpus size (uninitialized specs pass bands explicitly
-    // or stay at 1)
     val bands =
       if (queryBands > 0) queryBands
       else graft.Dials.traversalBands(
         graft.Dials.vectorCount.map(_ / QueryStride).getOrElse(0L), beam, degree)
-    val res = beamTraverse(ge, cvc, qv, entry, beam, rounds, bands)
-    Seq(g, ge, cvc, qv).foreach(_.unpersist(false))
+    val res = walk(ge, qv, entrySeeds(em, qv), bands)
+    Seq(ge, qv).foreach(_.unpersist(false))
+    graft.Cleanup.freeCheckpoint(built)
     res
   }
 
@@ -1496,151 +1509,104 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("cell").as("cand_id"))
   }
 
-  /** The beam-traversal core over prebuilt frames — `rounds` synchronous
-    * beam rounds from `entry`, re-ranked by exact query cosine each
-    * round, final beam minus the query cut at [[TopK]]. Shared verbatim
-    * by [[graphSearch]] and [[calibrateBeam]] (which probes several
-    * beams over ONE build — the probe would otherwise re-pay the build
-    * per rung). Caller owns ge/cvc/qv lifecycles.
+  /** Exact query cosine of (query_id, cand_id) candidates as `score`:
+    * `vecs` (cand_id, v) attaches by a SHUFFLE_HASH join — sort-merge
+    * would re-SORT the wide vector side every round, where a
+    * per-partition hash map of ~n/parallelism vectors builds in memory
+    * trivially — and the query vectors `qv` sliced to `band` attach by
+    * EXPLICIT broadcast (r15): unhinted, qv auto-broadcasts only below
+    * 10 MB, which ×1000 (40 k queries ≈ 21 MB) exceeds, and the
+    * sort-merge fallback's exchange carried every candidate row FAT
+    * (~60 GB of shuffle write per round). Nothing vector-bearing ever
+    * exchanges. */
+  private def cosineScored(vecs: DataFrame, qv: DataFrame)(cand: DataFrame, band: Column): DataFrame =
+    cand.join(vecs.hint("SHUFFLE_HASH"), "cand_id")
+      .join(broadcast(qv.where(band)), "query_id")
+      .select(col("query_id"), col("cand_id"), cosine(col("qv"), col("v")).as("score"))
+
+  /** The beam walk — `rounds` synchronous beam rounds from `entry`
+    * (query_id, cand_id) through [[graft.Pin.rounds]]: each round's
+    * candidates are beam ∪ neighbors(beam) over `ge`, scored by
+    * `score`, top-`beam` kept; the final beam minus the query is scored
+    * by `refine` and cut at [[TopK]] as (query_id, rank, neighbor_id).
+    * Both scorers map (candidates, query-band predicate) to
+    * (query_id, cand_id, score). Shared by [[graphSearch]] (exact
+    * cosine rounds), [[graphSearchPqWith]] (SDC rounds, exact refine)
+    * and [[calibrateBeam]]; the caller owns `ge` and the scorers'
+    * frames. The result is pinned.
     *
     * QUERY-BANDED above the derived single-pass tier (r16, VERDICT r15
     * #1): at the adversarial ×1000 tier the calibrated ~√n beam makes
     * each round's candidate distinct ~2.3 G rows ≈ 80 GB of exchange
-    * against ~60 GB scratch — the one recorded disk-bound tier left.
-    * Queries are INDEPENDENT: no candidate, score, or cut ever crosses
-    * query_ids, so slicing the query set by `pmod(query_id, bands)` and
-    * running the full `rounds` walk per slice SEQUENTIALLY (each band's
-    * |Q|/bands·TopK result rows pinned, predecessors' blocks freed, a
-    * driver GC between bands — the [[nnDescentEdges]] 2-hop band-loop
-    * discipline applied to the query axis) produces the IDENTICAL
-    * result set row for row (spec-pinned 2-band ≡ 1-band) while peak
-    * per-round exchange drops to 1/bands. bands = 1 IS the r15
-    * single-pass plan, byte-identical — every gate and ×100 tier. */
-  private def beamTraverse(ge: DataFrame, cvc: DataFrame, qv: DataFrame,
-                           entry: DataFrame, beam: Int, rounds: Int,
-                           bands: Int = 1): DataFrame = {
-    def rerank(cand: DataFrame, qvb: DataFrame, k: Int,
-               dedup: Boolean = false): DataFrame = {
-      // SHUFFLE_HASH, not sort-merge: SMJ would re-SORT the wide
-      // cached vector side every round (64-double rows × 32 competing
-      // sort buffers = spill thrash); a per-partition hash map of
-      // ~n/parallelism vectors builds in memory trivially.
-      // The QUERY vectors join by EXPLICIT broadcast (r15): unhinted,
-      // the qv side auto-broadcasts only below 10 MB — true at every
-      // gate and at ×100 (4 k queries ≈ 2.4 MB) but NOT at ×1000 (40 k
-      // queries ≈ 21 MB), where the planner silently fell back to a
-      // sort-merge join whose exchange carried the candidate frame FAT
-      // (the 520-byte corpus vector aboard every one of the round's
-      // ~112 M candidate rows — ~60 GB of shuffle write per round, the
-      // disk wall machine-confirmed at the ×1000 tier). Broadcast keeps
-      // both vector attaches and the cosine inside one stage; nothing
-      // vector-bearing ever exchanges. Under query banding the
-      // broadcast side is the BAND's slice of qv — 1/bands of an
-      // already-small table.
-      val scored = cand
-        .join(cvc.hint("SHUFFLE_HASH"), "cand_id")
-        .join(broadcast(qvb), "query_id")
-        .select(col("query_id"), col("cand_id"), cosine(col("qv"), col("v")).as("cos"))
-      // Candidate dedup rides the JOIN's cand_id exchange (r16): the
-      // round's frontier re-emits each beam slot once per symmetric
-      // edge, and a caller-side `.distinct()` paid a dedicated
-      // (query_id, cand_id) exchange of the FULL pre-distinct candidate
-      // frame every round — the round then exchanged the distinct rows
-      // AGAIN into the cand_id join. Deduplicating here instead, AFTER
-      // the projection, needs no exchange of its own: hash-partitioning
-      // on cand_id already co-locates every (query_id, cand_id) group
-      // (partitioning keys ⊆ grouping keys), so the aggregate and the
-      // hash-join probe share ONE exchange — 3 candidate exchanges per
-      // round become 2, and at the ×1000 tier the removed exchange is
-      // the round's pre-distinct ~80 GB one. Result-identical: a
-      // duplicated (query_id, cand_id) row carries a bit-identical cos
-      // (same two vectors), so dropDuplicates keeps the same set the
-      // caller-side distinct produced.
-      val cut = if (dedup) scored.dropDuplicates("query_id", "cand_id") else scored
-      val top = graft.plans.TopKPlans.topKPerKey(cut, "query_id", "cos", "cand_id", k, "rank")
-      if (sys.env.contains("SPARK_GRAFT_EXPLAIN_ROUND")) {
-        System.err.println(s"[beam] round rerank plan (dedup=$dedup):")
-        System.err.println(top.queryExecution.executedPlan.toString)
-      }
-      top
-    }
-    // localCheckpoint, not persist: each round references the beam
-    // TWICE (beam ∪ beam⋈edges), so a persist-only loop doubles the
-    // LOGICAL plan per round — by round 4 Catalyst re-analyzes a
-    // 450k-line tree and the driver, not the data, is the bottleneck
-    // (measured 22 s for a 32k-row round). The checkpoint truncates
-    // lineage to a LogicalRDD: constant plan depth, constant round
-    // cost (the `dedup_cluster` iteration rule applied to search).
-    def walk(entryB: DataFrame, qvb: DataFrame, sortOut: Boolean): DataFrame = {
-      var front = entryB.pinned
-      for (_ <- 1 to rounds) {
-        // no `.distinct()` here (r16): the dedup runs inside rerank on
-        // the join's own exchange — see the rerank scaladoc.
+    * against ~60 GB scratch. Queries are INDEPENDENT: no candidate,
+    * score, or cut ever crosses query_ids, so slicing the query set by
+    * a hash of query_id into `bands` and running the full walk per
+    * slice SEQUENTIALLY (a driver GC between bands — the
+    * [[nnDescentEdges]] 2-hop band-loop discipline applied to the query
+    * axis) produces the IDENTICAL result set row for row (spec-pinned
+    * 2-band ≡ 1-band) while peak per-round exchange drops to 1/bands.
+    * bands = 1 IS the single-pass plan. */
+  private def beamTraverse(tag: String, ge: DataFrame, entry: DataFrame, beam: Int,
+                           rounds: Int, bands: Int)
+                          (score: (DataFrame, Column) => DataFrame)
+                          (refine: (DataFrame, Column) => DataFrame): DataFrame = {
+    def walk(tagB: String, init: DataFrame, band: Column, sortOut: Boolean): DataFrame =
+      Pin.rounds(tagB, init, rounds) { (front, _) =>
         // The beam side BROADCASTS explicitly (r17, VERDICT r16 #5): the
-        // checkpointed frontier is an ExistingRDD with NO size stats, so
-        // the planner never auto-broadcast it and every round fell to a
-        // sort-merge join that re-exchanged AND re-sorted BOTH the beam
-        // and the cached edge frame (the r16 "pre-partitioning doesn't
-        // reach the join" note — the executed-plan evidence is
-        // plans/r17/beam_round_edges_{before,after}.txt). Broadcast is
+        // pinned frontier is an ExistingRDD with NO size stats, so the
+        // planner never auto-broadcast it and every round fell to a
+        // sort-merge join that re-exchanged AND re-sorted both the beam
+        // and the cached edge frame
+        // (plans/r17/beam_round_edges_{before,after}.txt). Broadcast is
         // bounded BY CONSTRUCTION: the query-band dial caps per-round
         // candidates at [[graft.Dials.TraversalBandCandRows]], so the
-        // frontier is ≤ that/(2·degree+1) ≈ 2.5 M (query_id, cand_id)
-        // pairs ≈ tens of MB at ANY tier — and the edge side now joins
-        // IN PLACE: zero per-round edge exchange, zero sorts.
+        // frontier is ≤ that/(2·degree+1) ≈ 2.5 M id pairs ≈ tens of
+        // MB at ANY tier — and the edge side joins IN PLACE.
         val expanded = front.unionAll(
-            broadcast(front).join(ge, front("cand_id") === ge("src"))
-              .select(front("query_id"), col("dst").as("cand_id")))
-        val next = rerank(expanded, qvb, beam, dedup = true)
+          broadcast(front).join(ge, front("cand_id") === ge("src"))
+            .select(front("query_id"), col("dst").as("cand_id")))
+        // The frontier re-emits each beam slot once per symmetric edge;
+        // the (query_id, cand_id) dedup rides the scorer's cand_id join
+        // exchange (partitioning keys ⊆ grouping keys) instead of paying
+        // a dedicated exchange of the pre-distinct frame (r16). A
+        // duplicated row carries a bit-identical score — the score is a
+        // pure function of (query_id, cand_id) — so the kept set is the
+        // distinct's.
+        graft.plans.TopKPlans.topKPerKey(
+            score(expanded, band).dropDuplicates("query_id", "cand_id"),
+            "query_id", "score", "cand_id", beam, "rank")
           .select("query_id", "cand_id")
-          .pinned
-        // superseded round's blocks, freed eagerly (the dedup_cluster /
-        // wc_lpa release rule — checkpoints are not CacheManager-tracked)
-        graft.Cleanup.freeCheckpoint(front)
-        front = next
+      } { front =>
+        val cut = graft.plans.TopKPlans.topKPerKey(
+            refine(front.where(col("cand_id") =!= col("query_id")), band),
+            "query_id", "score", "cand_id", TopK, "rank")
+          .select(col("query_id"), col("rank"), col("cand_id").as("neighbor_id"))
+        if (sortOut) cut.orderBy("query_id", "rank") else cut
       }
-      // checkpoint the |Q|·TopK result, then release EVERYTHING behind
-      // it: the corpus-sized cvc cache, the edge frames, the query
-      // vectors, and the last beam would otherwise stay pinned across
-      // the rest of a long session (nothing re-reads them once the
-      // result rows are materialized)
-      val cut = rerank(front.where(col("cand_id") =!= col("query_id")), qvb, TopK)
-        .select(col("query_id"), col("rank"), col("cand_id").as("neighbor_id"))
-      val res = (if (sortOut) cut.orderBy("query_id", "rank") else cut).pinned
-      graft.Cleanup.freeCheckpoint(front)
-      res
-    }
-    if (bands <= 1) walk(entry, qv, sortOut = true)
+    // pinned once: the broadcast assignment pass feeds round 1 twice
+    // (beam ∪ beam⋈edges) and, banded, every band's slice
+    val entryP = entry.pinned
+    if (bands <= 1) walk(tag, entryP, lit(true), sortOut = true)
     else {
-      // the entry seeds feed every band's slice — pin once so the
-      // broadcast assignment pass does not re-run per band
-      val entryP = entry.pinned
       var parts = Vector.empty[DataFrame]
       for (b <- 0 until bands) {
-        // driver GC between bands, same rationale as the 2-hop band
-        // loop: let the ContextCleaner reap the previous band's round
-        // shuffles while this band runs — peak scratch is one band's
+        // driver GC between bands: let the ContextCleaner reap the
+        // previous band's round shuffles — peak scratch is one band's
         // exchange, not the sum
         System.gc()
         val t0 = System.nanoTime()
-        // band on a HASH of the query id, not the id itself (r17,
-        // found ON the ×1000 ladder run): query ids are multiples of
-        // QueryStride, so `pmod(query_id, bands)` only populates the
-        // residues divisible by gcd(stride, bands) — at stride 50 /
-        // 24 bands HALF the bands ran empty and the populated ones
-        // carried 2× the dial's per-band exchange cap (at gcd 25 it
-        // would be 12×). The guide's synthetic-key rule (§2.5):
-        // derive the slice from a uniform deterministic hash.
-        // Result-identical — bands partition the query set either way.
-        val qvb = qv.where(pmod(xxhash64(col("query_id")), lit(bands)) === lit(b))
-        parts :+= walk(
-          entryP.where(pmod(xxhash64(col("query_id")), lit(bands)) === lit(b)),
-          qvb, sortOut = false)
+        // band on a HASH of the query id, not the id itself (r17): query
+        // ids are multiples of QueryStride, so `pmod(query_id, bands)`
+        // populates only the residues divisible by gcd(stride, bands) —
+        // at stride 50 / 24 bands HALF the bands ran empty. Bands
+        // partition the query set either way.
+        val band = pmod(xxhash64(col("query_id")), lit(bands)) === lit(b)
+        parts :+= walk(s"$tag band ${b + 1}/$bands", entryP.where(band), band, sortOut = false)
         System.err.println(
-          f"[beam] band ${b + 1}/$bands done in ${(System.nanoTime() - t0) / 1e9}%.1f s (beam $beam)")
+          f"[$tag] band ${b + 1}/$bands done in ${(System.nanoTime() - t0) / 1e9}%.1f s (beam $beam)")
       }
-      // band results are disjoint by construction (pmod partitions the
-      // query ids); the union + global sort touches |Q|·TopK rows only
+      // band results are disjoint by construction; the union + global
+      // sort touches |Q|·TopK rows only
       val res = parts.reduce(_ unionAll _).orderBy("query_id", "rank").pinned
       (entryP +: parts).foreach(graft.Cleanup.freeCheckpoint)
       res
@@ -1724,8 +1690,8 @@ object Similarity {
   private[graft] def calibrateBeam(em: DataFrame, degree: Int, rounds: Int,
                                    floor: Int, cap: Int): Int = {
     graft.plans.GraftFunctions.register(em.sparkSession)
-    val g = nnDescentEdges(em, degree).select(col("vec_id"), col("neighbor_id")).persist()
-    val ge = symmetrized(g)
+    val built = nnDescentEdges(em, degree)
+    val ge = symmetrized(built.select(col("vec_id"), col("neighbor_id")))
     val cvc = candVecs(em)
     val sampleIds = corpusVecs(em).where(col("vec_id") % QueryStride === 0)
       .select(col("vec_id"))
@@ -1743,15 +1709,13 @@ object Similarity {
       .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     val denom = truthTop.valuesIterator.map(_.size).sum.toDouble
     val entry = entrySeeds(em, qv)
+    val exact = cosineScored(cvc, qv) _
     val beams = (Iterator.iterate(floor)(_ * 2).takeWhile(_ < cap) ++ Iterator(cap)).toSeq
     var chosen = -1
     val it = beams.iterator
     while (chosen < 0 && it.hasNext) {
       val b = it.next()
-      // capture the rung's pinned frame so its checkpoint blocks free
-      // eagerly after collect (ADVICE r15 — the rungs are small, but
-      // the eager-free discipline is the file's contract)
-      val rung = beamTraverse(ge, cvc, qv, entry, b, rounds)
+      val rung = beamTraverse("beam_calib", ge, entry, b, rounds, 1)(exact)(exact)
       val got = rung.collect()
       graft.Cleanup.freeCheckpoint(rung)
       val hits = got.count(r =>
@@ -1760,11 +1724,12 @@ object Similarity {
       System.err.println(f"[beamcal] beam=$b recall@$TopK=$rec%.3f (floor=$floor cap=$cap)")
       if (rec >= CalibTargetRecall || !it.hasNext) chosen = b
     }
-    Seq(g, ge, cvc, qv).foreach(_.unpersist(false))
+    Seq(ge, cvc, qv).foreach(_.unpersist(false))
+    graft.Cleanup.freeCheckpoint(built)
     chosen
   }
 
-  /** LPA rounds over the k-NN graph — fixed (the wc_lpa
+  /** LPA rounds over the k-NN graph — fixed (the `wc_lpa`
     * static-plan-depth rule), so the key gates the 2-round partition. */
   val GraphLpaRounds = 2
 
@@ -1775,7 +1740,7 @@ object Similarity {
     * data selection, near-dup group discovery all run exactly this —
     * cluster the NEighborhood graph, not the raw space). Edges are the
     * k-NN graph's, symmetrized; two synchronous LPA rounds (Raghavan et
-    * al. 2007, the `wc_lpa` machinery on numeric vertices): every
+    * al. 2007, [[WordCount.labelPropagation]] on numeric vertices): every
     * vector starts as its own label, adopts the most frequent neighbor
     * label each round (tie → max label — total order). Output: top-20
     * communities by (size desc, label) with min/max member.
@@ -1802,45 +1767,12 @@ object Similarity {
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       .persist()
     val nodes = edges.select(col("src").as("node")).distinct()
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    for (_ <- 1 to GraphLpaRounds) {
-      val c = edges.join(labels.select(col("node").as("dst"), col("label")), "dst")
-        .groupBy(col("src").as("node"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      // argmax in ONE aggregate (r17, the wc_lpa fusion): lexicographic
-      // max over (cnt, label) structs = greatest count, ties by greatest
-      // label — identical pick to the former max + equality-join + max
-      // chain, which re-evaluated the round's edges⋈labels join + count
-      // aggregate once more per round (plan evidence:
-      // plans/r17/ann_graph_cluster_round_{before,after}.txt)
-      val pick = c.groupBy("node")
-        .agg(max(struct(col("cnt"), col("label"))).getField("label").as("nl"))
-      val prev = labels
-      // pin each round's label frame (r16): `c` is referenced twice
-      // (its own max + the argmax join) and round k's labels three
-      // times, so the lazy chain re-executed round k−1's join+aggs
-      // several times inside round k's plan — the wc_lpa per-round
-      // cache rule, applied here with localCheckpoint (one materialize,
-      // lineage truncated, superseded round's blocks freed eagerly)
-      val next = prev.join(pick, Seq("node"), "left")
-        .select(col("node"), coalesce(col("nl"), col("label")).as("label"))
-      labels = next.pinned
-      if (sys.env.contains("SPARK_GRAFT_EXPLAIN_ROUND")) {
-        System.err.println("[lpa] round label plan (post-execution):")
-        System.err.println(next.queryExecution.executedPlan.toString)
-      }
-      graft.Cleanup.freeCheckpoint(prev) // no-op on round 0's lazy frame
+    val res = WordCount.labelPropagation(edges, nodes, GraphLpaRounds, "ann_graph_cluster") {
+      _.groupBy("label")
+        .agg(count(lit(1)).as("n_vecs"), min("node").as("v_min"), max("node").as("v_max"))
+        .orderBy(col("n_vecs").desc, col("label"))
+        .limit(20)
     }
-    // checkpoint the 20-row result, then release the edge caches — same
-    // rule as graphSearch: nothing re-reads them once the result rows
-    // are materialized, and an unreleased edge frame survives the key
-    // across a long session
-    val res = labels.groupBy("label")
-      .agg(count(lit(1)).as("n_vecs"), min("node").as("v_min"), max("node").as("v_max"))
-      .orderBy(col("n_vecs").desc, col("label"))
-      .limit(20)
-      .pinned
-    graft.Cleanup.freeCheckpoint(labels) // last round's blocks (r16)
     Seq(g, edges).foreach(_.unpersist(false))
     res
   }
@@ -2140,8 +2072,6 @@ object Similarity {
       degree: Int = GraphDegree, queryBands: Int = 0): DataFrame = {
     graft.plans.GraftFunctions.register(em.sparkSession)
     val cents = pqCents.select(col("m"), col("cent_id"), vec(col("cv")).as("cv"))
-    val g = nnDescentEdges(em, degree).select(col("vec_id"), col("neighbor_id")).persist()
-    val ge = symmetrized(g)
     // the 4-int codes table replaces the fat corpus-vector cache on the
     // hot round path — hash-partitioned once, like candVecs. Codes are
     // cached DENSE (r17, VERDICT r16 #4: the when-chain rank runs once
@@ -2157,86 +2087,18 @@ object Similarity {
       .select(col("vec_id").as("query_id") +:
         (0 until PqM).map(m => denseCode(sdcIds(m), col(s"c$m")).as(s"q$m")): _*)
       .persist()
-    val qv = corpusVecs(em).where(col("vec_id") % QueryStride === 0)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
-      .persist()
-    val entry = entrySeeds(em, qv)
-    val bands =
-      if (queryBands > 0) queryBands
-      else graft.Dials.traversalBands(
-        graft.Dials.vectorCount.map(_ / QueryStride).getOrElse(0L), beam, degree)
-    def rerankSdc(cand: DataFrame, qwb: DataFrame, k: Int,
-                  dedup: Boolean = false): DataFrame = {
-      val scored = cand.join(cwide.hint("SHUFFLE_HASH"), "cand_id")
-        .join(broadcast(qwb), "query_id")
-        .select(col("query_id"), col("cand_id"),
-          sdcScore(sdcLuts, sdcKs, m => col(s"q$m"), m => col(s"c$m")).as("score"))
-      // same exchange-fusion as the exact path's rerank (r16): the
-      // (query_id, cand_id) dedup rides the cand_id join exchange —
-      // the SDC score is a pure function of (query_id, cand_id), so
-      // dropDuplicates keeps exactly the caller-side distinct's set
-      val cut = if (dedup) scored.dropDuplicates("query_id", "cand_id") else scored
-      val top = graft.plans.TopKPlans.topKPerKey(cut, "query_id", "score", "cand_id", k, "rank")
-      if (sys.env.contains("SPARK_GRAFT_EXPLAIN_ROUND")) {
-        System.err.println(s"[beam-pq] round rerank plan (dedup=$dedup):")
-        System.err.println(top.queryExecution.executedPlan.toString)
-      }
-      top
-    }
     // the final beam's EXACT refine — the only stage that touches raw
     // vectors; |Q|·beam rows, a one-shot id join, no cache needed
     val nv = corpusVecs(em).select(col("vec_id").as("cand_id"), col("v"))
-    def refine(front: DataFrame, qvb: DataFrame): DataFrame = {
-      val scored = front.where(col("cand_id") =!= col("query_id"))
-        .join(nv.hint("SHUFFLE_HASH"), "cand_id")
-        .join(broadcast(qvb), "query_id")
-        .select(col("query_id"), col("cand_id"), cosine(col("qv"), col("v")).as("cos"))
-      graft.plans.TopKPlans.topKPerKey(scored, "query_id", "cos", "cand_id", TopK, "rank")
-        .select(col("query_id"), col("rank"), col("cand_id").as("neighbor_id"))
+    val res = withGraph(em, beam, degree, queryBands) { (ge, qv, entry, bands) =>
+      beamTraverse("ann_graph_search_pq", ge, entry, beam, rounds, bands) { (cand, band) =>
+        cand.join(cwide.hint("SHUFFLE_HASH"), "cand_id")
+          .join(broadcast(qwide.where(band)), "query_id")
+          .select(col("query_id"), col("cand_id"),
+            sdcScore(sdcLuts, sdcKs, m => col(s"q$m"), m => col(s"c$m")).as("score"))
+      } (cosineScored(nv, qv))
     }
-    def walk(entryB: DataFrame, qwb: DataFrame, qvb: DataFrame,
-             sortOut: Boolean): DataFrame = {
-      var front = entryB.pinned
-      for (_ <- 1 to rounds) {
-        // dedup rides the join exchange — see the exact path's rerank;
-        // beam side broadcast for the same stats-blindness reason as
-        // the exact walk (bounded by the band dial's candidate cap)
-        val expanded = front.unionAll(
-            broadcast(front).join(ge, front("cand_id") === ge("src"))
-              .select(front("query_id"), col("dst").as("cand_id")))
-        val next = rerankSdc(expanded, qwb, beam, dedup = true)
-          .select("query_id", "cand_id")
-          .pinned
-        graft.Cleanup.freeCheckpoint(front)
-        front = next
-      }
-      val cut = refine(front, qvb)
-      val res = (if (sortOut) cut.orderBy("query_id", "rank") else cut).pinned
-      graft.Cleanup.freeCheckpoint(front)
-      res
-    }
-    val res =
-      if (bands <= 1) walk(entry, qwide, qv, sortOut = true)
-      else {
-        val entryP = entry.pinned
-        var parts = Vector.empty[DataFrame]
-        for (b <- 0 until bands) {
-          System.gc()
-          val t0 = System.nanoTime()
-          parts :+= walk(
-            // hash-banded — the exact walk's stride-collision note
-            entryP.where(pmod(xxhash64(col("query_id")), lit(bands)) === lit(b)),
-            qwide.where(pmod(xxhash64(col("query_id")), lit(bands)) === lit(b)),
-            qv.where(pmod(xxhash64(col("query_id")), lit(bands)) === lit(b)),
-            sortOut = false)
-          System.err.println(
-            f"[beam-pq] band ${b + 1}/$bands done in ${(System.nanoTime() - t0) / 1e9}%.1f s (beam $beam)")
-        }
-        val r = parts.reduce(_ unionAll _).orderBy("query_id", "rank").pinned
-        (entryP +: parts).foreach(graft.Cleanup.freeCheckpoint)
-        r
-      }
-    Seq(g, ge, cwide, qwide, qv).foreach(_.unpersist(false))
+    Seq(cwide, qwide).foreach(_.unpersist(false))
     res
   }
 

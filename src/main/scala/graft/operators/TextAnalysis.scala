@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Pin, Tables}
 import graft.Pin.PinOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1333,11 +1333,11 @@ object TextAnalysis {
     * weight table + a doc-keyed score aggregation + a bucket-keyed
     * update aggregation — both combiner-friendly; the corpus is scanned
     * once into the persisted (doc, bucket, cnt) feature frame and never
-    * re-tokenized. Epochs compose lazily (T is fixed and small);
-    * persisted intermediates release via [[graft.Cleanup.releaseAll]]
-    * (the Verify/Bench between-query contract). This is the map-reduce
-    * ML-training pattern (parameter broadcast + gradient aggregation)
-    * the reference's fixed-reducer topology cannot express. */
+    * re-tokenized; epochs run through [[graft.Pin.rounds]], and the
+    * feature and label caches are freed once the weights are pinned.
+    * This is the map-reduce ML-training pattern (parameter broadcast +
+    * gradient aggregation) the reference's fixed-reducer topology
+    * cannot express. */
   val TrainIters = 3
 
   def trainClassifier(docs: DataFrame): DataFrame = {
@@ -1359,16 +1359,14 @@ object TextAnalysis {
     // epoch 1 from w=0: every doc is misclassified (y·0 ≤ 0), so the
     // first update is the full label-weighted feature sum — and every
     // bucket present in feats enters the weight table here (later
-    // epochs' deltas are subsets, so the left join below never drops)
-    // each epoch's weight table is PINNED (r16): `w` is referenced
-    // twice per epoch (the broadcast score pass + the update's left
-    // side), so the lazy chain re-executed epoch k−1's aggregation
-    // several times inside epoch k's plan — the wc_lpa per-round cache
-    // rule on a ≤ClfBuckets-row frame (a localCheckpoint of ≤4096 rows)
-    var w = feats.join(labels, "doc_id")
+    // epochs' deltas are subsets, so the left join below never drops).
+    // Pinned like every later epoch: `w` is referenced twice per epoch
+    // (the broadcast score pass + the update's left side), and the
+    // pin is a localCheckpoint of ≤ClfBuckets rows.
+    val w1 = feats.join(labels, "doc_id")
       .groupBy("bucket").agg(sum(col("y") * col("cnt")).as("wt"))
       .pinned
-    for (_ <- 2 to TrainIters) {
+    val res = Pin.rounds("text_train", w1, TrainIters - 1) { (w, _) =>
       val scores = feats.join(broadcast(w), "bucket")
         .groupBy("doc_id").agg(sum(col("cnt") * col("wt")).as("score"))
       val mis = labels.join(scores, Seq("doc_id"), "left")
@@ -1376,15 +1374,15 @@ object TextAnalysis {
         .select("doc_id", "y")
       val delta = feats.join(mis, "doc_id")
         .groupBy("bucket").agg(sum(col("y") * col("cnt")).as("dw"))
-      val prev = w
-      w = prev.join(delta, Seq("bucket"), "left")
+      w.join(delta, Seq("bucket"), "left")
         .select(col("bucket"), (col("wt") + coalesce(col("dw"), lit(0L))).as("wt"))
-        .pinned
-      graft.Cleanup.freeCheckpoint(prev)
+    } {
+      _.where(col("wt") =!= 0)
+        .select(col("bucket"), col("wt").as("weight"))
+        .orderBy("bucket")
     }
-    w.where(col("wt") =!= 0)
-      .select(col("bucket"), col("wt").as("weight"))
-      .orderBy("bucket")
+    Seq(feats, labels).foreach(_.unpersist(false))
+    res
   }
 
   /** Hashed-BAG-OF-WORDS linear classifier INFERENCE — the fastText /

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -577,6 +578,13 @@ object WordCount {
   private def vocabOf(tp: DataFrame): DataFrame =
     tp.groupBy("w").agg(count(lit(1)).as("cnt"))
 
+  /** The undirected word graph as distinct directed (src, dst) edges —
+    * the (u, v) pairs and their reverses. */
+  private def undirected(und: DataFrame): DataFrame =
+    und.union(und.select(col("v").as("u"), col("u").as("v")))
+      .distinct()
+      .select(col("u").as("src"), col("v").as("dst"))
+
   /** BREADTH-FIRST SEARCH (`wc_bfs`) — level-synchronous BFS over the
     * undirected word-adjacency graph from the corpus's most frequent
     * word (ties lexicographic): per hop 0..[[BfsMaxHop]], the newly
@@ -593,36 +601,33 @@ object WordCount {
     * + distinct + anti-join — a Zipf hub inflates one round's join
     * fan-out but the DISTINCT collapses it to vocabulary size before
     * the next round; rounds are fixed at 4, not data-dependent. The
-    * oracle is DuckDB's `WITH RECURSIVE` — the declarative twin of the
-    * same traversal. */
+    * round state is the visited (word, hop) frame — vocabulary-bounded,
+    * pinned per round by [[graft.Pin.rounds]]. The oracle is DuckDB's
+    * `WITH RECURSIVE` — the declarative twin of the same traversal. */
   def bfs(docs: DataFrame): DataFrame = {
     val tp = tokenPairs(docs).persist()
-    val und = adjacentPairs(tp)
-    val edges = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .select(col("u").as("src"), col("v").as("dst"))
-      .persist()
+    val edges = undirected(adjacentPairs(tp)).persist()
     val vocab = vocabOf(tp)
     val seed = vocab.orderBy(col("cnt").desc, col("w")).limit(1)
       .select(col("w").as("word"), lit(0L).as("hop"))
-    var visited = seed
-    var frontier = seed
-    for (h <- 1 to BfsMaxHop) {
-      val next = edges.join(frontier.select(col("word").as("src")), "src")
+    val res = Pin.rounds("wc_bfs", seed, BfsMaxHop) { (visited, h) =>
+      // round h expands the hop h−1 frontier
+      val frontier = visited.where(col("hop") === h - 1).select(col("word").as("src"))
+      visited.union(edges.join(frontier, "src")
         .select(col("dst").as("word")).distinct()
         .join(visited.select("word"), Seq("word"), "left_anti")
-        .select(col("word"), lit(h.toLong).as("hop"))
-        .persist()
-      visited = visited.union(next)
-      frontier = next
+        .select(col("word"), lit(h.toLong).as("hop")))
+    } { visited =>
+      val unreached = vocab.select(col("w").as("word"))
+        .join(visited.select("word"), Seq("word"), "left_anti")
+        .select(col("word"), lit(-1L).as("hop"))
+      visited.union(unreached)
+        .groupBy("hop")
+        .agg(count(lit(1)).as("n_words"), min("word").as("w_min"), max("word").as("w_max"))
+        .orderBy("hop")
     }
-    val unreached = vocab.select(col("w").as("word"))
-      .join(visited.select("word"), Seq("word"), "left_anti")
-      .select(col("word"), lit(-1L).as("hop"))
-    visited.union(unreached)
-      .groupBy("hop")
-      .agg(count(lit(1)).as("n_words"), min("word").as("w_min"), max("word").as("w_max"))
-      .orderBy("hop")
+    Seq(tp, edges).foreach(_.unpersist(false))
+    res
   }
 
   /** BFS as a NATIVE RECURSIVE CTE (`wc_bfs_rec`, r10) — the same
@@ -703,34 +708,25 @@ object WordCount {
     * associative, map-side combinable — a Zipf hub's fan-in collapses
     * in the combiner, never concentrating rows on one reducer the way
     * an argmax-by-key join would). Distance frames are
-    * vocabulary-bounded; each round persists and releases its
-    * predecessor (the [[lpa]] cache-boundary rule). Rounds fixed, no
-    * driver-side convergence loop. The oracle unrolls the identical
-    * rounds as min-union CTEs. */
+    * vocabulary-bounded. Rounds fixed, no driver-side convergence loop.
+    * The oracle unrolls the identical rounds as min-union CTEs. */
   def sssp(docs: DataFrame): DataFrame = {
     val tp = tokenPairs(docs).persist()
-    val und = adjacentPairs(tp)
     val wgt = lit(1) + Dedup.h32(lit("sssp"),
-      concat(least(col("u"), col("v")), lit(" "), greatest(col("u"), col("v")))) % SsspWgtMod
-    val edges = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .select(col("u").as("src"), col("v").as("dst"), wgt.cast("long").as("w"))
+      concat(least(col("src"), col("dst")), lit(" "), greatest(col("src"), col("dst")))) % SsspWgtMod
+    val edges = undirected(adjacentPairs(tp))
+      .select(col("src"), col("dst"), wgt.cast("long").as("w"))
       .persist()
     val seed = vocabOf(tp)
       .orderBy(col("cnt").desc, col("w")).limit(1)
       .select(col("w").as("word"), lit(0L).as("dist"))
-    var dist = seed.persist()
-    for (_ <- 1 to SsspRounds) {
+    val res = Pin.rounds("wc_sssp", seed, SsspRounds) { (dist, _) =>
       val relaxed = edges.join(dist.select(col("word").as("src"), col("dist")), "src")
         .select(col("dst").as("word"), (col("dist") + col("w")).as("dist"))
-      val prev = dist
-      dist = prev.unionAll(relaxed)
-        .groupBy("word").agg(min("dist").as("dist"))
-        .persist()
-      dist.count()
-      prev.unpersist()
-    }
-    dist.orderBy(col("dist"), col("word")).limit(50)
+      dist.unionAll(relaxed).groupBy("word").agg(min("dist").as("dist"))
+    } (_.orderBy(col("dist"), col("word")).limit(50))
+    Seq(tp, edges).foreach(_.unpersist(false))
+    res
   }
 
   /** k-core threshold: vertices with fewer surviving neighbors peel. */
@@ -755,9 +751,7 @@ object WordCount {
     * set against the alive frame (src alive ∧ dst alive) + one
     * combiner-friendly degree count; alive frames are vocabulary-
     * bounded and shrink monotonically; rounds fixed → static plan
-    * depth; each round persists and releases its predecessor (the
-    * [[lpa]] cache-boundary rule). The oracle unrolls the identical
-    * rounds as CTEs. */
+    * depth. The oracle unrolls the identical rounds as CTEs. */
   def kcore(docs: DataFrame): DataFrame = {
     // DELIBERATELY NOT the r16 single-scan base (r17, VERDICT r16 #5,
     // measured): the symmetrize union's two branches DO each re-derive
@@ -778,27 +772,21 @@ object WordCount {
         (a, b) => struct(a.as("u"), b.as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .where(col("u") =!= col("v"))
-    val edges = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .select(col("u").as("src"), col("v").as("dst"))
-      .persist()
+    val edges = undirected(und).persist()
     def degrees(alive: DataFrame): DataFrame = edges
       .join(alive.select(col("word").as("src")), "src")
       .join(alive.select(col("word").as("dst")), "dst")
       .groupBy("src").agg(count(lit(1)).as("deg"))
-    var alive = edges.select(col("src").as("word")).distinct().persist()
-    alive.count()
-    for (_ <- 1 to KCoreRounds) {
-      val prev = alive
-      alive = degrees(prev).where(col("deg") >= KCoreK)
-        .select(col("src").as("word")).persist()
-      alive.count()
-      prev.unpersist()
+    val res = Pin.rounds("wc_kcore", edges.select(col("src").as("word")).distinct(), KCoreRounds) {
+      (alive, _) => degrees(alive).where(col("deg") >= KCoreK).select(col("src").as("word"))
+    } {
+      degrees(_)
+        .select(col("src").as("word"), col("deg"))
+        .orderBy(col("deg").desc, col("word"))
+        .limit(50)
     }
-    degrees(alive)
-      .select(col("src").as("word"), col("deg"))
-      .orderBy(col("deg").desc, col("word"))
-      .limit(50)
+    edges.unpersist(false)
+    res
   }
 
   /** MINIMUM SPANNING FOREST via BORŮVKA (`wc_mst`, r10) — the
@@ -897,64 +885,62 @@ object WordCount {
     * local structure, `wc_bfs` traverses it, `text_textrank` scores
     * nodes, LPA PARTITIONS the graph.
     *
-    * Per round: ONE vocab-keyed equi-join of the persisted edge set
-    * against the current label frame + two combiner-friendly aggregates
-    * (label counts, then one lexicographic struct-max argmax) — every
-    * frame is VOCABULARY-bounded (Zipf: ≪ corpus), and the edge set
+    * Per round ([[labelPropagation]]): ONE vocab-keyed equi-join of the
+    * persisted edge set against the current label frame + two
+    * combiner-friendly aggregates (label counts, then one
+    * lexicographic struct-max argmax) — every frame is
+    * VOCABULARY-bounded (Zipf: ≪ corpus), and the edge set
     * (distinct-bigram-bounded) is persisted once for all rounds, the
     * `wc_triangles` cache-boundary rule. A stopword hub inflates one
     * round's neighbor-label fan-out linearly in its degree — never
     * quadratically (labels aggregate before the argmax). Isolated words
-    * keep their label via the left join. Rounds are fixed, not
-    * data-dependent: plan depth is static, no driver-side convergence
-    * loop. The oracle unrolls the identical three rounds as CTEs —
+    * keep their label. Rounds are fixed, not data-dependent: plan depth
+    * is static, no driver-side convergence loop. The oracle unrolls the identical three rounds as CTEs —
     * argmax expressed as the explicit two-stage max-count-then-max-label
     * (equivalent to the struct max by lexicographic order), so neither
     * engine leans on an unspecified arg_max tie-break. */
   def lpa(docs: DataFrame): DataFrame = {
     val tp = tokenPairs(docs).persist()
-    val und = adjacentPairs(tp)
-    val edges = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .select(col("u").as("src"), col("v").as("dst"))
-      .persist()
+    val edges = undirected(adjacentPairs(tp)).persist()
     val nodes = tp.select(col("w").as("node")).distinct()
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    for (_ <- 1 to LpaRounds) {
-      val c = edges
+    val res = labelPropagation(edges, nodes, LpaRounds, "wc_lpa") {
+      _.groupBy("label")
+        .agg(count(lit(1)).as("n_words"), min("node").as("w_min"), max("node").as("w_max"))
+        .orderBy(col("n_words").desc, col("label"))
+        .limit(50)
+    }
+    Seq(tp, edges).foreach(_.unpersist(false))
+    res
+  }
+
+  /** Synchronous label propagation — the one LPA round body, shared by
+    * [[lpa]] and `Similarity.graphClusters`: every node of `nodes`
+    * (node) starts as its own label; each of `rounds` rounds it adopts
+    * the most frequent label among its neighbors over the directed
+    * `edges` (src, dst) — ties by greatest label — and an isolated node
+    * keeps its label. Every edge endpoint must be a node. Rounds run
+    * through [[graft.Pin.rounds]] under `tag`; the result is `summary`
+    * over the final (node, label) frame, pinned. The caller owns
+    * `edges`. */
+  private[graft] def labelPropagation(edges: DataFrame, nodes: DataFrame, rounds: Int,
+                                      tag: String)(summary: DataFrame => DataFrame): DataFrame =
+    Pin.rounds(tag, nodes.select(col("node"), col("node").as("label")), rounds) { (labels, _) =>
+      val votes = edges
         .join(labels.select(col("node").as("dst"), col("label")), "dst")
         .groupBy(col("src").as("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      // argmax in ONE aggregate (r17): max over (cnt, label) structs is
+      // argmax in ONE aggregate: max over (cnt, label) structs is
       // lexicographic — greatest count, ties by greatest label — exactly
-      // the published two-stage max-count-then-max-label pick, which
-      // previously ran as a per-node max + equality join + second
-      // aggregate and RE-EVALUATED the whole edges⋈labels join + count
-      // aggregate per round (both subtrees executed — plan-proven,
-      // plans/r17/wc_lpa_round_{before,after}.txt). The oracle keeps the
-      // explicit two-stage CTE spelling; equivalence is the struct
-      // order, and the hash gate re-proves it every run.
-      val pick = c.groupBy("node")
-        .agg(max(struct(col("cnt"), col("label"))).getField("label").as("nl"))
-      val prev = labels
-      // persist each round's frame: without it round k's lineage
-      // re-executes rounds 1..k−1 (the connectedComponents lesson);
-      // release the superseded frame so only one label table is live
-      labels = prev.join(pick, Seq("node"), "left")
-        .select(col("node"), coalesce(col("nl"), col("label")).as("label"))
-        .persist()
-      labels.count()
-      if (sys.env.contains("SPARK_GRAFT_EXPLAIN_ROUND")) {
-        System.err.println("[lpa] round label plan (post-execution):")
-        System.err.println(labels.queryExecution.executedPlan.toString)
-      }
-      prev.unpersist()
-    }
-    labels.groupBy("label")
-      .agg(count(lit(1)).as("n_words"), min("node").as("w_min"), max("node").as("w_max"))
-      .orderBy(col("n_words").desc, col("label"))
-      .limit(50)
-  }
+      // the published two-stage max-count-then-max-label pick. The
+      // node's own label joins the vote at count 0, so any neighbor
+      // vote (count ≥ 1) beats it and an isolated node keeps it: no
+      // join back onto the label frame, and no exchange for one. The
+      // oracles spell it as the two-stage CTE plus that left join; the
+      // hash gate re-proves the equivalence every run.
+      votes.unionAll(labels.select(col("node"), col("label"), lit(0L).as("cnt")))
+        .groupBy("node")
+        .agg(max(struct(col("cnt"), col("label"))).getField("label").as("label"))
+    }(summary)
 
   /** CONNECTED COMPONENTS of the word-adjacency graph (`wc_cc`) — the
     * fifth and final graph-family member (triangles count structure,

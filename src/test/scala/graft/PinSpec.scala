@@ -1,12 +1,15 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Similarity, TextAnalysis, WordCount}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pins the [[Pin]] fault-tolerance switch: local (default) vs reliable
   * checkpointing produce identical results, and the reliable path
   * actually writes lineage-free checkpoint files into the configured
-  * directory (what survives an executor loss). */
+  * directory (what survives an executor loss). Also pins the
+  * [[Pin.rounds]] release contract: its operators leave only the
+  * returned frame behind. */
 class PinSpec extends SparkSpec {
 
   private def edges = {
@@ -24,19 +27,52 @@ class PinSpec extends SparkSpec {
   }
 
   test("pin: local and reliable checkpointing agree on an iterative operator") {
-    val local = Dedup.connectedComponents(nodes, edges).collect().toSet
+    val docs = Tables.documents(spark, sf)
+    val ops = Seq[(String, () => DataFrame)](
+      "connectedComponents" -> (() => Dedup.connectedComponents(nodes, edges)),
+      "lpa" -> (() => WordCount.lpa(docs)))
+    val local = ops.map { case (_, op) => op().collect().toSet }
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    System.setProperty("spark.graft.checkpointDir", dir)
-    try {
-      val reliable = Dedup.connectedComponents(nodes, edges).collect().toSet
-      assert(reliable == local)
-      // the switch really engaged: checkpoint part-files exist on disk
+    def partFiles(): Long = {
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      val wrote =
-        try walk.filter(p => p.getFileName.toString.startsWith("part-")).count()
-        finally walk.close()
-      assert(wrote > 0, s"no checkpoint files under $dir")
+      try walk.filter(p => p.getFileName.toString.startsWith("part-")).count()
+      finally walk.close()
+    }
+    System.setProperty("spark.graft.checkpointDir", dir)
+    try ops.zip(local).foreach { case ((name, op), want) =>
+      val before = partFiles()
+      assert(op().collect().toSet == want, s"$name: reliable rows differ from local")
+      // the switch really engaged: this operator wrote checkpoint part-files
+      assert(partFiles() > before, s"$name wrote no checkpoint files under $dir")
     } finally System.clearProperty("spark.graft.checkpointDir")
+  }
+
+  test("pin: Pin.rounds operators free their own intermediates") {
+    // from an empty session: a cache of the same plan left by an earlier
+    // test would make a leaked persist() a no-op and hide it
+    Cleanup.releaseAll(spark)
+    val docs = Tables.documents(spark, sf)
+    val em = Tables.embeddings(spark, sf)
+    val cents = Similarity.trainPqCodebook(em)
+    val ops = Seq[(String, () => DataFrame)](
+      "wc_lpa" -> (() => WordCount.lpa(docs)),
+      "wc_bfs" -> (() => WordCount.bfs(docs)),
+      "wc_sssp" -> (() => WordCount.sssp(docs)),
+      "wc_kcore" -> (() => WordCount.kcore(docs)),
+      "ann_graph_cluster" -> (() => Similarity.graphClusters(em)),
+      "ann_graph_search" -> (() => Similarity.graphSearch(em)),
+      "ann_graph_search_pq" -> (() => Similarity.graphSearchPqWith(em, cents)),
+      "text_train" -> (() => TextAnalysis.trainClassifier(docs)))
+    val sc = spark.sparkContext
+    val leaks = ops.flatMap { case (name, op) =>
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val res = op()
+      res.collect()
+      Cleanup.freeCheckpoint(res)
+      val left = sc.getPersistentRDDs.keys.filterNot(before).toSeq.sorted
+      if (left.isEmpty) None else Some(s"$name left RDDs ${left.mkString(",")}")
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
   }
 
   test("pin: default path truncates lineage (plan is a scan, not the producing query)") {
