@@ -44,4 +44,13 @@ object Cleanup {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking)
       case _ => ()
     }
+
+  /** Free every pinned frame `df` reads — the `LogicalRDD` leaves of its
+    * plan. For an operator's internal pins once its own result is
+    * pinned; non-blocking, like [[freeCheckpoint]]. */
+  private[graft] def freePins(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    }
 }

@@ -15,8 +15,11 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * `ann_graph_search_pq`, the beam calibration probe), `wc_bfs`,
   * `wc_sssp`, `wc_kcore` and the perceptron epochs (`text_train`).
   * Those operators free their own intermediates; only the returned
-  * frame remains for the caller. The convergence loops
-  * (`Dedup.connectedComponents`, `minhashClusters`) keep their own.
+  * frame remains for the caller. `Dedup.connectedComponents` runs to
+  * convergence, not for a fixed count, so it loops itself: each round
+  * is one [[eager]] pin carrying its convergence witness, superseded
+  * rounds are freed, and only its pinned roots remain. The
+  * `minhashClusters` convergence loop keeps its own policy.
   *
   * Why pin at all: each iteration of these operators consumes its own
   * output. Un-truncated, the logical plan doubles per round — analysis

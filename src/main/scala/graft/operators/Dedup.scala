@@ -2,8 +2,12 @@ package graft.operators
 
 import graft.Tables
 import graft.Pin.PinOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 
 /** Deduplication family for a training-data pipeline (SURVEY §2.3):
   * exact, MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -561,8 +565,24 @@ object Dedup {
 
   /** Large-star/small-star connected components over ANY pair relation
     * (doc_a, doc_b) — reusable for whatever candidate generator produced
-    * the pairs (MinHash bands, embedding buckets, explicit edges). */
-  def connectedComponents(nodes: DataFrame, pairs: DataFrame): DataFrame = {
+    * the pairs (MinHash bands, embedding buckets, explicit edges).
+    *
+    * Each round is ONE job: the pin that materializes it also carries
+    * the round's convergence witness through `Dataset.observe`. Once the
+    * live edge count is at most [[finishBound]] — the edge rows that fit
+    * `spark.sql.autoBroadcastJoinThreshold`, capped at 2²⁰, so that
+    * setting also picks the algorithm — the star rounds stop and
+    * union-find finishes the components in one executor task — no
+    * driver-side collection. The roots frame (every non-root node → its
+    * component minimum) is pinned and every edge round is freed, so the
+    * returned frame keeps only the roots alive. */
+  def connectedComponents(nodes: DataFrame, pairs: DataFrame): DataFrame =
+    connectedComponents(nodes, pairs, finishBound(pairs))
+
+  /** [[connectedComponents]] finishing with union-find at `bound` live
+    * edges or fewer; −1 runs the star rounds to convergence. */
+  private[graft] def connectedComponents(nodes: DataFrame, pairs: DataFrame,
+                                         bound: Long): DataFrame = {
     def bidir(e: DataFrame) =
       e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
     // large-star: every neighbor LARGER than u links to the minimum of
@@ -585,50 +605,112 @@ object Dedup {
         .unionAll(g.select(col("src"), col("m").as("dst")))
         .where(col("src") =!= col("dst")).distinct()
     }
-    // localCheckpoint each round: materializes AND truncates lineage —
-    // persist alone leaves the logical plan nesting every prior round,
-    // which grows super-linearly and OOMs the driver on deep graphs.
-    // Superseded rounds' checkpoint blocks are freed EXPLICITLY below
-    // (checkpoints are not CacheManager-tracked; waiting for the
-    // ContextCleaner needs a driver GC that may never happen mid-suite,
-    // which is exactly how storage memory filled up across a 61-query
-    // bench run).
-    // Convergence witness: ONE aggregate action per round — (row count,
-    // exact-decimal sum of per-edge hashes). Rounds produce DISTINCT
-    // edge sets, so equal (count, hash-sum) across consecutive rounds
-    // witnesses set equality up to a 64-bit hash-sum collision
-    // (≈2⁻⁶⁴ — and a false positive merely stops one round early on a
-    // monotone contraction). Replaces two exceptAll.isEmpty wide-shuffle
-    // actions per round: at cluster scale each saved action is a full
-    // round-trip.
-    def edgeStats(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)"))).head()
-      (r.getLong(0),
-        Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
+    // Pin each round (lineage stays O(1)) and read its convergence
+    // witness — (row count, exact-decimal sum of per-edge hashes) — from
+    // the pin's own job. Rounds produce DISTINCT edge sets, so equal
+    // witnesses across consecutive rounds show set equality up to a
+    // 64-bit hash-sum collision (≈2⁻⁶⁴ — and a false positive merely
+    // stops one round early on a monotone contraction).
+    // The pin runs through the observed frame's own QueryExecution, so
+    // its metrics are read synchronously once the pin returns.
+    def pinWitnessed(e: DataFrame): (DataFrame, Row) = {
+      val o = e.observe("witness", count(lit(1)),
+        sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")))
+      val p = o.pinned
+      (p, o.queryExecution.observedMetrics("witness"))
     }
-    var edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .pinned
-    var prevStats = edgeStats(edges)
-    var stable = prevStats._1 == 0L // no edges: already converged
-    while (!stable) {
-      val next = smallStar(largeStar(edges)).pinned
-      val nextStats = edgeStats(next)
+    var (edges, stats) =
+      pinWitnessed(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+    val order = vertexOrder(edges.schema)
+    def live = stats.getLong(0)
+    def finishes = order.isDefined && live <= bound
+    var stable = live == 0L // no edges: already converged
+    while (!stable && !finishes) {
+      val (next, nextStats) = pinWitnessed(smallStar(largeStar(edges)))
       graft.Cleanup.freeCheckpoint(edges) // superseded round's blocks, freed eagerly
       edges = next
-      stable = nextStats == prevStats
-      prevStats = nextStats
+      stable = nextStats == stats
+      stats = nextStats
     }
-    // the converged edge frame stays cached: it backs the lazily-consumed
-    // result (same contract as minhashClusters' label frame)
+    val roots = (order match {
+      case Some(ord) if finishes =>
+        edges.coalesce(1).mapPartitions(unionFind(ord))(Encoders.row(edges.schema))
+          .toDF("src", "root")
+      case _ => edges.groupBy("src").agg(min("dst").as("root"))
+    }).pinned
+    graft.Cleanup.freeCheckpoint(edges, blocking = true)
     val labels = nodes.select(col("doc_id"))
-      .join(edges.groupBy("src").agg(min("dst").as("root")),
-        col("doc_id") === col("src"), "left_outer")
+      .join(roots, col("doc_id") === col("src"), "left_outer")
       .select(col("doc_id"),
         coalesce(col("root"), col("doc_id")).as("cluster_id"))
     labels.select(col("doc_id"), col("cluster_id"),
         (col("doc_id") === col("cluster_id")).cast("long").as("is_canonical"))
       .orderBy("doc_id")
+  }
+
+  /** Live edges at or under which [[connectedComponents]] finishes in
+    * one task: as many edge rows (at the row's `defaultSize`, 16 bytes
+    * for Long ends, 40 for String ends whatever their real length) as
+    * fit the session's `spark.sql.autoBroadcastJoinThreshold`, the size
+    * Spark already trusts to a single task, capped at [[FinishMaxEdges]].
+    * So the broadcast threshold also picks the CC algorithm: at the
+    * 10 MB default, 655 360 Long or 262 144 String edges; −1, which
+    * also turns broadcasting off, keeps the star rounds to the end. */
+  private def finishBound(pairs: DataFrame): Long = {
+    val threshold = SQLConf.get.autoBroadcastJoinThreshold
+    if (threshold < 0) -1L
+    else math.min(FinishMaxEdges,
+      threshold / pairs.select(col("doc_a"), col("doc_b")).schema.defaultSize)
+  }
+
+  /** The largest union-find finish measured against the star rounds
+    * (`plans/r19/finish_size.md`, `local[4]`): at 2²⁰ random edges the
+    * finish ran 3.3–7.3 s against 31–70 s of star rounds, and its one
+    * task held 67 MB (Long ids) to 146 MB (64-character String ids) of
+    * heap. A larger broadcast threshold does not raise the bound past
+    * it. */
+  private val FinishMaxEdges = 1L << 20
+
+  /** The local order that equals Spark's `min`/`least` on the vertex
+    * type: Long, or String by UTF-8 bytes. Other types have none here,
+    * so their components run the star rounds to the end. */
+  private def vertexOrder(e: StructType): Option[Ordering[Any]] =
+    e.map(_.dataType).distinct match {
+      case Seq(LongType) => Some(Ordering.Long.asInstanceOf[Ordering[Any]])
+      case Seq(StringType) => Some(Utf8Order.asInstanceOf[Ordering[Any]])
+      case _ => None
+    }
+
+  private object Utf8Order extends Ordering[String] {
+    def compare(a: String, b: String): Int =
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+  }
+
+  /** Union-find over every (src, dst) row it is given, linking each
+    * root under the smaller one, so a component's root is its minimum.
+    * Emits (node, component minimum) for every non-root node — the
+    * shape of the converged star edges. Rows with a NULL end join
+    * nothing, as in the star rounds' equi-joins. */
+  private def unionFind(ord: Ordering[Any])(rows: Iterator[Row]): Iterator[Row] = {
+    val parent = mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var root = x
+      var up = parent.getOrElseUpdate(root, root)
+      while (up != root) { root = up; up = parent(root) }
+      var n = x
+      while (n != root) { val next = parent(n); parent(n) = root; n = next }
+      root
+    }
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val (a, b) = (find(r.get(0)), find(r.get(1)))
+        if (a != b) { if (ord.lt(a, b)) parent(b) = a else parent(a) = b }
+      }
+    }
+    parent.keys.toArray.iterator.flatMap { n =>
+      val root = find(n)
+      if (root == n) None else Some(Row(n, root))
+    }
   }
 
   /** Quality-based cluster REPRESENTATIVES: a real corpus build keeps

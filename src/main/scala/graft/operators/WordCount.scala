@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Pin
+import graft.{Cleanup, Pin}
+import graft.Pin.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -551,24 +552,27 @@ object WordCount {
     * unreached remainder), and each used to derive them from its OWN
     * corpus pass — two full text scans + two regex tokenizations per
     * query (guide §1.2: don't compute what you already computed). This
-    * frame is ONE scan and map-only (no shuffle of its own): each token
-    * emits (itself, its successor-or-NULL — the doc's last token pairs
-    * with NULL), persisted by the caller so [[adjacentPairs]] and
-    * [[vocabOf]] both read the tokenization instead of re-running the
-    * regex split over the corpus. Every token appears exactly once as
-    * `w`, so [[vocabOf]]'s count is byte-identical to the
-    * explode-words count, and [[adjacentPairs]] is byte-identical to
-    * the zip-sliced bigram pair frame (multiplicities included — the
-    * downstream distinct/groupBy shapes are unchanged). */
+    * frame is ONE scan: each token emits (itself, its successor-or-NULL
+    * — the doc's last token pairs with NULL), grouped to (w, nxt, n)
+    * with n the pair's multiplicity, and pinned here, so
+    * [[adjacentPairs]] and [[vocabOf]] both read one tokenization (not
+    * a lazy `persist()`: two concurrent stages each fill a lazy cache,
+    * tokenizing the corpus twice). Every token appears exactly once as `w`, so
+    * [[vocabOf]]'s sum of n is byte-identical to the explode-words
+    * count, and [[adjacentPairs]] is the distinct zip-sliced bigram
+    * pair set — every consumer applies distinct or a group-by to it.
+    * The caller frees it with [[graft.Cleanup.freeCheckpoint]]. */
   private def tokenPairs(docs: DataFrame): DataFrame = {
     val ws = filter(split(col("text"), TokenRe), w => w =!= "")
     docs.select(explode(zip_with(
         ws, slice(ws, lit(2), greatest(size(ws) - 1, lit(0))),
         (a, b) => struct(a.as("w"), b.as("nxt")))).as("t"))
-      .select(col("t.w").as("w"), col("t.nxt").as("nxt"))
+      .groupBy(col("t.w").as("w"), col("t.nxt").as("nxt"))
+      .agg(count(lit(1)).as("n"))
+      .pinned
   }
 
-  /** Directed adjacent-word pairs (u, v) with multiplicity, self-pairs
+  /** Directed adjacent-word pairs (u, v), distinct, self-pairs
     * dropped — the `und` frame every graph operator symmetrizes. */
   private def adjacentPairs(tp: DataFrame): DataFrame =
     tp.where(col("nxt").isNotNull && col("w") =!= col("nxt"))
@@ -576,7 +580,7 @@ object WordCount {
 
   /** (w, cnt) word frequencies from the [[tokenPairs]] frame. */
   private def vocabOf(tp: DataFrame): DataFrame =
-    tp.groupBy("w").agg(count(lit(1)).as("cnt"))
+    tp.groupBy("w").agg(sum("n").as("cnt"))
 
   /** The undirected word graph as distinct directed (src, dst) edges —
     * the (u, v) pairs and their reverses. */
@@ -605,7 +609,7 @@ object WordCount {
     * pinned per round by [[graft.Pin.rounds]]. The oracle is DuckDB's
     * `WITH RECURSIVE` — the declarative twin of the same traversal. */
   def bfs(docs: DataFrame): DataFrame = {
-    val tp = tokenPairs(docs).persist()
+    val tp = tokenPairs(docs)
     val edges = undirected(adjacentPairs(tp)).persist()
     val vocab = vocabOf(tp)
     val seed = vocab.orderBy(col("cnt").desc, col("w")).limit(1)
@@ -626,7 +630,8 @@ object WordCount {
         .agg(count(lit(1)).as("n_words"), min("word").as("w_min"), max("word").as("w_max"))
         .orderBy("hop")
     }
-    Seq(tp, edges).foreach(_.unpersist(false))
+    Cleanup.freeCheckpoint(tp)
+    edges.unpersist(false)
     res
   }
 
@@ -651,7 +656,7 @@ object WordCount {
     * vocabulary-bounded). */
   def bfsRecursive(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
-    val tp = tokenPairs(docs).persist()
+    val tp = tokenPairs(docs)
     val und = adjacentPairs(tp)
     und.union(und.select(col("v").as("u"), col("u").as("v"))).distinct()
       .select(col("u").as("src"), col("v").as("dst"))
@@ -660,7 +665,7 @@ object WordCount {
     vocab.createOrReplaceTempView("g47_vocab")
     vocab.orderBy(col("cnt").desc, col("word")).limit(1)
       .select("word").createOrReplaceTempView("g47_seed")
-    s.sql(s"""
+    val res = s.sql(s"""
       WITH RECURSIVE reach(word, hop) AS (
         SELECT word, 0 FROM g47_seed
         UNION ALL
@@ -675,7 +680,11 @@ object WordCount {
         FROM g47_vocab v LEFT ANTI JOIN mh ON v.word = mh.word)
       SELECT CAST(hop AS BIGINT) AS hop, count(*) AS n_words,
         min(word) AS w_min, max(word) AS w_max
-      FROM allw GROUP BY hop ORDER BY hop""")
+      FROM allw GROUP BY hop ORDER BY hop""").pinned
+    // the views read tp, whose blocks are freed next
+    Seq("g47_edges", "g47_vocab", "g47_seed").foreach(s.catalog.dropTempView)
+    Cleanup.freeCheckpoint(tp)
+    res
   }
 
   /** Bellman-Ford relaxation rounds — fixed like [[BfsMaxHop]]: the key
@@ -711,7 +720,7 @@ object WordCount {
     * vocabulary-bounded. Rounds fixed, no driver-side convergence loop.
     * The oracle unrolls the identical rounds as min-union CTEs. */
   def sssp(docs: DataFrame): DataFrame = {
-    val tp = tokenPairs(docs).persist()
+    val tp = tokenPairs(docs)
     val wgt = lit(1) + Dedup.h32(lit("sssp"),
       concat(least(col("src"), col("dst")), lit(" "), greatest(col("src"), col("dst")))) % SsspWgtMod
     val edges = undirected(adjacentPairs(tp))
@@ -725,7 +734,8 @@ object WordCount {
         .select(col("dst").as("word"), (col("dist") + col("w")).as("dist"))
       dist.unionAll(relaxed).groupBy("word").agg(min("dist").as("dist"))
     } (_.orderBy(col("dist"), col("word")).limit(50))
-    Seq(tp, edges).foreach(_.unpersist(false))
+    Cleanup.freeCheckpoint(tp)
+    edges.unpersist(false)
     res
   }
 
@@ -900,7 +910,7 @@ object WordCount {
     * (equivalent to the struct max by lexicographic order), so neither
     * engine leans on an unspecified arg_max tie-break. */
   def lpa(docs: DataFrame): DataFrame = {
-    val tp = tokenPairs(docs).persist()
+    val tp = tokenPairs(docs)
     val edges = undirected(adjacentPairs(tp)).persist()
     val nodes = tp.select(col("w").as("node")).distinct()
     val res = labelPropagation(edges, nodes, LpaRounds, "wc_lpa") {
@@ -909,7 +919,8 @@ object WordCount {
         .orderBy(col("n_words").desc, col("label"))
         .limit(50)
     }
-    Seq(tp, edges).foreach(_.unpersist(false))
+    Cleanup.freeCheckpoint(tp)
+    edges.unpersist(false)
     res
   }
 
@@ -954,24 +965,26 @@ object WordCount {
     * doc-id graphs — applied UNCHANGED to string vertices (the
     * contraction only needs a total order, and min/least on strings is
     * one; that genericity is itself the point of having ONE CC
-    * implementation). Edge set distinct-bigram-bounded; rounds are
-    * one-aggregate-action each with localCheckpoint truncation (see the
-    * Dedup scaladoc). The oracle is the same recursive min-reachable
-    * closure `dedup_cluster` uses, over word edges. */
+    * implementation). Edge set distinct-bigram-bounded: at gate scale
+    * it fits one task, so union-find finishes it with no star round
+    * (see the Dedup scaladoc). The result is pinned so the token base
+    * and the CC roots can be freed. The oracle is the same recursive
+    * min-reachable closure `dedup_cluster` uses, over word edges. */
   def components(docs: DataFrame): DataFrame = {
-    val tp = tokenPairs(docs).persist()
-    val und = adjacentPairs(tp)
-    val pairs = und
-      .select(least(col("u"), col("v")).as("doc_a"),
-        greatest(col("u"), col("v")).as("doc_b"))
-      .distinct()
+    val tp = tokenPairs(docs)
+    // already distinct (directed) rows; CC reads each pair undirected
+    val pairs = adjacentPairs(tp).toDF("doc_a", "doc_b")
     val nodes = tp.select(col("w").as("doc_id")).distinct()
-    Dedup.connectedComponents(nodes, pairs)
+    val cc = Dedup.connectedComponents(nodes, pairs)
+    val res = cc
       .groupBy(col("cluster_id").as("label"))
       .agg(count(lit(1)).as("n_words"),
         min("doc_id").as("w_min"), max("doc_id").as("w_max"))
       .orderBy(col("n_words").desc, col("label"))
       .limit(50)
+      .pinned
+    Cleanup.freePins(cc) // tp and the CC roots, both read only by res
+    res
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

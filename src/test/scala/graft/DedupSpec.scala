@@ -31,8 +31,8 @@ class DedupSpec extends SparkSpec {
     val scored = docs.select(col("doc_id"),
       operators.TextAnalysis.qualityScoreCol.as("quality"))
     val composed = Dedup.representatives(clusters, scored)
-    // no candidate re-derivation: connectedComponents checkpoints its
-    // converged edges, so the composed plan must contain no shingle/band
+    // no candidate re-derivation: connectedComponents pins its
+    // component roots, so the composed plan must contain no shingle/band
     // machinery (`explode` drives the shingle generator) — only the
     // cluster labels + the quality scan
     val p = composed.queryExecution.optimizedPlan.toString
@@ -214,10 +214,38 @@ class DedupSpec extends SparkSpec {
     val n = 200
     val nodes = (0 until n).map(_.toLong).toDF("doc_id")
     val chain = (0 until n - 1).map(i => (i.toLong, i.toLong + 1)).toDF("doc_a", "doc_b")
-    val c = Dedup.connectedComponents(nodes, chain)
+    // bound 0: no union-find finish, the star rounds run to convergence
+    val c = Dedup.connectedComponents(nodes, chain, 0L)
     assert(c.select("cluster_id").distinct().collect().map(_.getLong(0)).toSet == Set(0L))
     assert(c.where(col("is_canonical") === 1).count() == 1)
     assert(c.count() == n)
+  }
+
+  test("union-find finish and star rounds produce identical clusters") {
+    val s = spark
+    import s.implicits._
+    val n = 200
+    val chainNodes = (0 until n).map(_.toLong).toDF("doc_id")
+    val chain = (0 until n - 1).map(i => (i.toLong, i.toLong + 1)).toDF("doc_a", "doc_b")
+    val minhash = Dedup.minhashPairs(docs).select(col("doc_a"), col("doc_b")).distinct()
+    // U+FF21 sorts below U+1F600 by UTF-8 bytes (Spark's string order)
+    // but above it by UTF-16 units: the finish must use Spark's order
+    val words = Seq("b", "a", "c", "\uFF21", "\uD83D\uDE00", "x", "y", "z", "lone")
+      .toDF("doc_id")
+    val wordPairs = Seq(("b", "c"), ("c", "a"), ("\uD83D\uDE00", "\uFF21"),
+      ("z", "y"), ("y", "x")).toDF("doc_a", "doc_b")
+    val cases = Seq(
+      "chain" -> (chainNodes, chain),
+      "minhash pairs" -> (docs.select(col("doc_id")), minhash),
+      "string vertices" -> (words, wordPairs),
+      "empty pairs" -> (chainNodes, Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")),
+      "nodes in no pair" -> ((0L until 300L).toDF("doc_id"), chain.where(col("doc_a") % 7 =!= 3)))
+    for ((name, (nodes, pairs)) <- cases) {
+      val star = Dedup.connectedComponents(nodes, pairs, -1L).collect().toSeq
+      val finish = Dedup.connectedComponents(nodes, pairs, Long.MaxValue).collect().toSeq
+      assert(star.nonEmpty, name)
+      assert(star == finish, s"$name: union-find finish differs from the star rounds")
+    }
   }
 
   test("identical docs collide in every band; disjoint docs in none") {

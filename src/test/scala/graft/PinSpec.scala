@@ -30,7 +30,8 @@ class PinSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val ops = Seq[(String, () => DataFrame)](
       "connectedComponents" -> (() => Dedup.connectedComponents(nodes, edges)),
-      "lpa" -> (() => WordCount.lpa(docs)))
+      "lpa" -> (() => WordCount.lpa(docs)),
+      "components" -> (() => WordCount.components(docs)))
     val local = ops.map { case (_, op) => op().collect().toSet }
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     def partFiles(): Long = {
@@ -57,6 +58,8 @@ class PinSpec extends SparkSpec {
     val ops = Seq[(String, () => DataFrame)](
       "wc_lpa" -> (() => WordCount.lpa(docs)),
       "wc_bfs" -> (() => WordCount.bfs(docs)),
+      "wc_bfs_rec" -> (() => WordCount.bfsRecursive(docs)),
+      "wc_cc" -> (() => WordCount.components(docs)),
       "wc_sssp" -> (() => WordCount.sssp(docs)),
       "wc_kcore" -> (() => WordCount.kcore(docs)),
       "ann_graph_cluster" -> (() => Similarity.graphClusters(em)),
@@ -64,15 +67,27 @@ class PinSpec extends SparkSpec {
       "ann_graph_search_pq" -> (() => Similarity.graphSearchPqWith(em, cents)),
       "text_train" -> (() => TextAnalysis.trainClassifier(docs)))
     val sc = spark.sparkContext
-    val leaks = ops.flatMap { case (name, op) =>
+    def newRdds(op: () => DataFrame, free: Boolean): Seq[Int] = {
       val before = sc.getPersistentRDDs.keySet.toSet
       val res = op()
       res.collect()
-      Cleanup.freeCheckpoint(res)
-      val left = sc.getPersistentRDDs.keys.filterNot(before).toSeq.sorted
+      if (free) Cleanup.freeCheckpoint(res)
+      sc.getPersistentRDDs.keys.filterNot(before).toSeq.sorted
+    }
+    val leaks = ops.flatMap { case (name, op) =>
+      val left = newRdds(op, free = true)
       if (left.isEmpty) None else Some(s"$name left RDDs ${left.mkString(",")}")
     }
     assert(leaks.isEmpty, leaks.mkString("; "))
+    // wc_bfs_rec's temp views read its freed token base: none may remain
+    val views = spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("g47_"))
+    assert(views.isEmpty, s"wc_bfs_rec left views ${views.mkString(",")}")
+    // connectedComponents frees its edge rounds on both paths: only the
+    // pinned roots behind its (lazy) result remain
+    for (bound <- Seq(-1L, Long.MaxValue)) {
+      val left = newRdds(() => Dedup.connectedComponents(nodes, edges, bound), free = false)
+      assert(left.size == 1, s"connectedComponents (bound $bound) left RDDs ${left.mkString(",")}")
+    }
   }
 
   test("pin: default path truncates lineage (plan is a scan, not the producing query)") {
