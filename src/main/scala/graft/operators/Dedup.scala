@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.Tables
 import graft.Pin.PinOps
+import graft.functions.SimHash32
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.GraftSqlBridge.{column => native, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
@@ -1084,9 +1086,9 @@ object Dedup {
     * oracle emit no row for a doc with zero tokens; without the filter
     * the native path would emit simhash=0 for them). */
   def simhashNative(docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     docs.where(col("text").rlike("\\p{L}"))
-      .selectExpr("doc_id", "graft_simhash32(text) AS simhash").orderBy("doc_id")
+      .select(col("doc_id"), native(SimHash32(expression(col("text")))).as("simhash"))
+      .orderBy("doc_id")
   }
 
   /** ppm per signature component — 10⁶/[[NumHashes]], exact. */

@@ -2,8 +2,9 @@ package graft.operators
 
 import graft.{Pin, Tables}
 import graft.Pin.PinOps
-import graft.functions.LshImpl
+import graft.functions.{CosineSim, DotProduct, LshBuckets, LshImpl}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftSqlBridge.{column => native, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -75,9 +76,9 @@ object Similarity {
   /** Cosine via the native codegen'd expression
     * [[graft.functions.CosineSim]] — identical accumulation order to the
     * declarative `aggregate(zip_with(...))` fold it replaced, ~10× faster
-    * on the per-candidate hot loops. Callers must have run
-    * `GraftFunctions.register(spark)` (every operator entry point does). */
-  def cosine(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
+    * on the per-candidate hot loops. Built directly, so it needs no
+    * function registration on the session. */
+  def cosine(a: Column, b: Column): Column = native(CosineSim(expression(a), expression(b)))
 
   /** Inner product via the native codegen'd [[graft.functions.DotProduct]]
     * — the MIPS ranking score (r10): on norm-augmented vectors whose
@@ -85,7 +86,11 @@ object Similarity {
     * `list_inner_product` computes (same left-to-right double fold),
     * which removes the augmented-cosine |x_aug| ulp surface the ADVICE
     * flagged from both MIPS gates. */
-  def dotp(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  def dotp(a: Column, b: Column): Column = native(DotProduct(expression(a), expression(b)))
+
+  /** Per-table LSH bucket ids of an ARRAY<FLOAT> vector at `bits` bits
+    * — the native [[graft.functions.LshBuckets]]. */
+  private def lshBuckets(v: Column, bits: Int): Column = native(LshBuckets(expression(v), bits))
 
   private def queriesDf(em: DataFrame): DataFrame =
     em.where(col("vec_id") % QueryStride === 0)
@@ -93,7 +98,6 @@ object Similarity {
 
   /** Brute-force cosine top-k: every query against the whole corpus. */
   def bruteForce(em: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val corpus = em.select(col("vec_id").as("neighbor_id"), vec(col("embedding")).as("nv"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id"))
@@ -134,7 +138,6 @@ object Similarity {
     * frame. Shared by the exhaustive scan ([[sqTopK]]) and the
     * IVF-restricted composition ([[sqIvf]]). */
   private def sqDequantized(em: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val dims = em.select(posexplode(vec(col("embedding"))).as(Seq("pos", "x")))
       .groupBy("pos").agg(min("x").as("lo"), max("x").as("hi"))
     // deterministic assembly: sort the collected (pos, lo, hi) structs
@@ -232,7 +235,6 @@ object Similarity {
     * product retrieval — compose by training the codebook on augmented
     * vectors. The max-norm "model" is a 1-row broadcast aggregate. */
   def mipsTopK(em: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val withNorm = em.select(col("vec_id"), vec(col("embedding")).as("v"))
       .withColumn("nrm2", aggregate(transform(col("v"), x => x * x),
         lit(0.0), (acc, x) => acc + x))
@@ -325,7 +327,6 @@ object Similarity {
     * 163.9 s n·q scan (20.7×), within 1.7 s of `ann_ivf_trained`'s
     * 6.2 s — the reduction rides the cosine index at par (§5c-r9). */
   def mipsIvf(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val em = Tables.embeddings(s, d)
     val dir = mipsCodebookPath(d)
     val aug = augmented(em).persist()
@@ -340,7 +341,6 @@ object Similarity {
     * frames — spec-runnable on synthetic corpora without fixtures. */
   private[graft] def mipsIvfWith(em: DataFrame, aug: DataFrame,
                                  cents: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val assign = nearestCells(aug.select(col("vec_id"), col("av").as("v")), cents, 1)
       .withColumnRenamed("vec_id", "neighbor_id")
     // queries augment with 0 (their true norm rides the cosine's |q|)
@@ -379,9 +379,8 @@ object Similarity {
   private def lshIndex(em: DataFrame): DataFrame = lshIndex(em, LshBits)
 
   private def lshIndex(em: DataFrame, bits: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     em.select(col("vec_id"),
-        posexplode(call_function("graft_lsh_buckets", col("embedding"), lit(bits)))
+        posexplode(lshBuckets(col("embedding"), bits))
           .as(Seq("tbl", "bucket")))
       .select(col("vec_id"), col("tbl").cast("long").as("tbl"), col("bucket"))
   }
@@ -459,7 +458,6 @@ object Similarity {
     * shared core of the stride stand-in ([[ivfTopK]]) and the persisted
     * trained codebook ([[ivfTrained]]). */
   private[graft] def ivfWith(em: DataFrame, cents: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     def nearestCells(side: DataFrame, idCol: String, n: Int): DataFrame = {
       val w = Window.partitionBy(idCol).orderBy(col("ccos").desc, col("cent_id"))
       // explicit broadcast nested-loop over the TINY centroid set: n×K
@@ -526,7 +524,6 @@ object Similarity {
     * rare fallback. The oracle mirrors the pruning, the miss set, and
     * the fallback exactly. */
   def ivfImi(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val dir = codebookPath(d)
     if (!graft.sources.Fixtures.ready(dir))
       persistCodebook(Tables.embeddings(s, d), dir)
@@ -582,15 +579,12 @@ object Similarity {
     * and the oracle's unrolled DOUBLE sums on both sides. */
   private[graft] def imiScoredVecs(vecs: DataFrame, cents: DataFrame,
                                    bits: Int): (DataFrame, DataFrame) = {
-    graft.plans.GraftFunctions.register(vecs.sparkSession)
     val centIdx = cents.select(col("cent_id"),
-        posexplode(call_function("graft_lsh_buckets",
-            transform(col("cv"), x => x.cast("float")), lit(bits)))
+        posexplode(lshBuckets(transform(col("cv"), x => x.cast("float")), bits))
           .as(Seq("tbl", "bucket")))
       .select(col("cent_id"), col("tbl").cast("long").as("tbl"), col("bucket"))
     val scored = vecs.select(col("vec_id"), col("v"),
-        posexplode(call_function("graft_lsh_buckets",
-            transform(col("v"), x => x.cast("float")), lit(bits)))
+        posexplode(lshBuckets(transform(col("v"), x => x.cast("float")), bits))
           .as(Seq("tbl", "bucket")))
       .select(col("vec_id"), col("v"),
         col("tbl").cast("long").as("tbl"), col("bucket"))
@@ -667,7 +661,6 @@ object Similarity {
     * model. Reference analogue: the fixed reducer-count codebooks of
     * /root/reference/core/map_reduce.go partition work the same way. */
   def trainCodebook(em: DataFrame, k: Int = TrainedK, iters: Int = LloydIters): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val vecs = em.select(col("vec_id"), vec(col("embedding")).as("v"))
     var cents = vecs
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
@@ -758,7 +751,6 @@ object Similarity {
     * batch-sized slice of it, and [[ivfRank]]'s probe tail is shared
     * verbatim with every other IVF key. */
   def ivfUpsert(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val em = Tables.embeddings(s, d)
     val cbDir = codebookPath(d)
     if (!graft.sources.Fixtures.ready(cbDir)) persistCodebook(em, cbDir)
@@ -778,7 +770,6 @@ object Similarity {
     * spec-runnable on synthetic corpora without fixtures. */
   private[graft] def ivfUpsertWith(em: DataFrame, cents: DataFrame,
                                    stored: DataFrame, fresh: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val upserts = cellAssign(fresh, cents) // |batch|·K, the only assignment work
     val assign = stored.unionAll(upserts).withColumnRenamed("vec_id", "neighbor_id")
     val probes = nearestCells(
@@ -811,7 +802,6 @@ object Similarity {
     * vector. n=1 is cell ASSIGNMENT ([[cellAssign]]); n=[[NProbe]] is
     * query PROBING. */
   private[graft] def nearestCells(corpus: DataFrame, cents: DataFrame, n: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val w = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cent_id"))
     corpus.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cent_id"), cosine(col("v"), col("cv")).as("ccos"))
@@ -902,7 +892,6 @@ object Similarity {
     * refinement round. */
   private[graft] def knnEdges(em: DataFrame, k: Int = KnnK,
                               cellCap: Int = graft.Dials.knnCellCap): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val cents = em.where(col("vec_id") % CentroidStride === 0)
       .select(col("vec_id").as("cent_id"), vec(col("embedding")).as("cv"))
     // CLOSURE (multi-probe) assignment, not 1-probe (r13): each vector's
@@ -1689,7 +1678,6 @@ object Similarity {
     * ordered, so every session derives the same beam. */
   private[graft] def calibrateBeam(em: DataFrame, degree: Int, rounds: Int,
                                    floor: Int, cap: Int): Int = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val built = nnDescentEdges(em, degree)
     val ge = symmetrized(built.select(col("vec_id"), col("neighbor_id")))
     val cvc = candVecs(em)
@@ -1891,7 +1879,6 @@ object Similarity {
     * (vec_id, m) first, then aggregated wide behind a second
     * exchange. */
   private def pqWideCodes(em: DataFrame, cents: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val subs = em.select(col("vec_id"), posexplode(
         array((0 until PqM).map(m =>
           slice(vec(col("embedding")), m * PqSub + 1, PqSub)): _*)).as(Seq("m", "vm")))
@@ -2016,7 +2003,6 @@ object Similarity {
     * synthetic corpora without fixtures). */
   private[graft] def pqRerankWith(em: DataFrame, ivfCents: DataFrame,
                                   pqCents: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val ws = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id"))
     val short = pqScores(em, pqCents, ivfCandidates(em, ivfCents))
       .withColumn("srn", row_number().over(ws)).where(col("srn") <= ShortR)
@@ -2058,7 +2044,6 @@ object Similarity {
     * exact refine means quantization can only exclude a true neighbor
     * from the last beam, never reorder the answer list. */
   def graphSearchPq(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val em = Tables.embeddings(s, d)
     val pqDir = pqCodebookPath(d)
     if (!graft.sources.Fixtures.ready(pqDir)) persistPqCodebook(em, pqDir)
@@ -2070,7 +2055,6 @@ object Similarity {
   private[graft] def graphSearchPqWith(em: DataFrame, pqCents: DataFrame,
       beam: Int = Beam, rounds: Int = BeamRounds,
       degree: Int = GraphDegree, queryBands: Int = 0): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val cents = pqCents.select(col("m"), col("cent_id"), vec(col("cv")).as("cv"))
     // the 4-int codes table replaces the fat corpus-vector cache on the
     // hot round path — hash-partitioned once, like candVecs. Codes are
@@ -2113,7 +2097,6 @@ object Similarity {
   val DedupProbes = 2
 
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val em = Tables.embeddings(s, d)
     val dir = codebookPath(d)
     if (!graft.sources.Fixtures.ready(dir))
@@ -2169,7 +2152,6 @@ object Similarity {
     * ever corpus×corpus. At 100 TB this is one coarse-bucketed map
     * pass plus a bench-sized hash join. */
   def embedDecontam(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val em = Tables.embeddings(s, d)
     val dir = codebookPath(d)
     if (!graft.sources.Fixtures.ready(dir)) persistCodebook(em, dir)
@@ -2214,7 +2196,6 @@ object Similarity {
     * [[embedDup]], also consumed by multi-signal dedup
     * ([[Dedup.combinedClusters]]). */
   def embedDupPairs(em: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val va = em.select(col("vec_id").as("vec_a"), vec(col("embedding")).as("av"))
     val vb = em.select(col("vec_id").as("vec_b"), vec(col("embedding")).as("bv"))
     lshCandidates(em)
@@ -2273,7 +2254,6 @@ object Similarity {
     * PlanShapeSpec whitelist class); fusion joins two 100-row frames.
     * Corpus-sized work: one tokenize, one cosine map pass. */
   def hybridSearch(docs: DataFrame, em: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val words = docs.select(col("doc_id"),
       explode(filter(split(col("text"), " "), w => w =!= "")).as("w"))
     val qterms = broadcast(words.groupBy("w").agg(count(lit(1)).as("cnt"))
@@ -2343,7 +2323,6 @@ object Similarity {
     * (filter ∧ cell) exactly as in faiss's selector-aware search —
     * pre-filtering is WHY that composition is possible. */
   def filteredTopK(em: DataFrame, docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     // broadcast the PROJECTED id set explicitly: at 100× it crosses the
     // auto-broadcast threshold and AQE would otherwise plan a sort-merge
     // join that shuffles AND sorts the full wide-vector corpus (measured
@@ -2386,7 +2365,6 @@ object Similarity {
     * lesson (§5c-r8c) with `ann_ivf_trained`'s probe machinery
     * unchanged — [[ivfRank]] is the shared tail. */
   def filteredIvf(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val em = Tables.embeddings(s, d)
     val dir = codebookPath(d)
     if (!graft.sources.Fixtures.ready(dir))
@@ -2400,7 +2378,6 @@ object Similarity {
     * spec-runnable on synthetic corpora without fixtures. */
   private[graft] def filteredIvfWith(em: DataFrame, allowed: DataFrame,
                                      cents: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(em.sparkSession)
     val fcorpus = em.join(broadcast(allowed), col("vec_id") === col("doc_id"))
       .select(col("vec_id"), vec(col("embedding")).as("v"))
     val assign = cellAssign(fcorpus, cents)

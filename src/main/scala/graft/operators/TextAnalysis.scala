@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.{Pin, Tables}
 import graft.Pin.PinOps
+import graft.functions.BpeIds
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftSqlBridge.{column => native, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -1077,11 +1079,10 @@ object TextAnalysis {
   }
 
   def bpeTokens(docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val words = docs.select(col("doc_id"),
       explode(filter(split(col("text"), " "), w => w =!= "")).as("w"))
     val wordStats = words.select("w").distinct()
-      .withColumn("ids", expr("graft_bpe_ids(w)"))
+      .withColumn("ids", native(BpeIds(expression(col("w")))))
       .select(col("w"),
         size(col("ids")).cast("long").as("n_sub"),
         size(filter(col("ids"), x => x === graft.functions.BpeImpl.UnkId))

@@ -182,31 +182,21 @@ object TrainingPipeline {
     // counts and the downstream chain all read it, and re-running the
     // framed parse per consumer would multiply the scan cost
     // (Cleanup.releaseAll drops it under the session contract).
-    // SPARK_GRAFT_WARC_GZ routes the head through the GZIPPED staging
-    // (one gzip member per record — the real Common Crawl layout) —
-    // result-INVISIBLE by construction (both stagings hold identical
-    // records; the inflated byte stream is the plain one), so the knob
-    // is a ladder measurement of the decode cost model, not a semantic
-    // dial
     "pipe_warc"    -> ((s, d) =>
-      warcChain(s,
-        if (sys.env.contains("SPARK_GRAFT_WARC_GZ"))
-          graft.sources.Sources.warcGzDir(s, d)
-        else graft.sources.Sources.warcDir(s, d))),
-    // `pipe_warcgz` (r15, VERDICT r14 #8): the IDENTICAL chain forced
-    // through the GZIPPED staging every round — until now the gz head
-    // was only exercised by the ladder knob above, so the measured
-    // member-per-record decode path had no standing correctness gate.
-    // Same oracle text as pipe_warc (the stagings hold identical
-    // records; the inflated byte stream IS the plain one), so a hash
-    // match proves the gz framing end-to-end through all nine stages.
+      warcChain(s, graft.sources.Sources.warcDir(s, d))),
+    // `pipe_warcgz` (r15): the IDENTICAL chain through the GZIPPED
+    // staging (one gzip member per record — the real Common Crawl
+    // layout), so the member-per-record decode path has a standing
+    // correctness gate. Same oracle text as pipe_warc (the stagings
+    // hold identical records; the inflated byte stream IS the plain
+    // one), so a hash match proves the gz framing end-to-end through
+    // all nine stages.
     "pipe_warcgz"  -> ((s, d) =>
       warcChain(s, graft.sources.Sources.warcGzDir(s, d))),
   )
 
   /** The crawl-head chain over an explicit WARC staging dir — shared by
-    * `pipe_warc` (plain by default, gz under the ladder knob) and
-    * `pipe_warcgz` (gz always). */
+    * `pipe_warc` (plain staging) and `pipe_warcgz` (gzipped staging). */
   private def warcChain(s: SparkSession, dir: String): DataFrame = {
     val recs = graft.sources.Sources.readWarc(s, dir)
       .withColumn("doc_id",

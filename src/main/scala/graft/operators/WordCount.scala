@@ -815,7 +815,8 @@ object WordCount {
     * Rounds fixed at 2 (the [[LpaRounds]] static-plan-depth rule): the
     * key gates the two-round FOREST, not the converged MST — a third
     * round is this same shape again. Output: every forest edge
-    * (round, a, b, w), totally ordered.
+    * (round, a, b, w), totally ordered and pinned, so the edge set,
+    * the round-1 forest and the CC roots are freed here.
     *
     * Distinct-edge tie safety: weights collide (mod [[SsspWgtMod]]),
     * so the argmin orders by the FULL edge identity (w, a, b) — both
@@ -874,10 +875,15 @@ object WordCount {
     val inc2 = ec.select(col("ca").as("k"), col("a"), col("b"), col("w"))
       .unionAll(ec.select(col("cb").as("k"), col("a"), col("b"), col("w")))
     val f2 = pick(inc2)
-    f1.withColumn("round", lit(1L))
+    val res = f1.withColumn("round", lit(1L))
       .unionAll(f2.withColumn("round", lit(2L)))
       .select(col("round"), col("a"), col("b"), col("w"))
       .orderBy("round", "w", "a", "b")
+      .pinned
+    edges.unpersist(false)
+    f1.unpersist(false)
+    Cleanup.freePins(comp) // the CC roots, read only by res
+    res
   }
 
   /** LPA round count — fixed so the plan depth is static and the

@@ -1,13 +1,13 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeSet, BindReferences, Expression, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
@@ -26,9 +26,8 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   *    attributes; analysis/optimization flow through it untouched
   *    (column pruning still prunes unused right columns via
   *    [[AsOfJoinNode.references]]);
-  *  - [[AsOfJoinStrategy]] (injected via `SparkSessionExtensions
-  *    .injectPlannerStrategy` or `spark.experimental.extraStrategies`)
-  *    plans it to [[AsOfJoinExec]];
+  *  - [[GraftStrategy]] (set up by [[GraftPlans.asofJoin]], or injected
+  *    by [[GraftExtensions]]) plans it to [[AsOfJoinExec]];
   *  - the exec declares `ClusteredDistribution` on both keys and
   *    per-partition (key, time) sort orders — `EnsureRequirements`
   *    inserts the co-partitioning exchanges and sorts exactly as it
@@ -66,21 +65,17 @@ case class AsOfJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-object AsOfJoinStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinNode(l, r, lk, rk, lt, rt, pay) =>
-      AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, pay) :: Nil
-    case _ => Nil
-  }
-}
-
-case class AsOfJoinExec(
-    left: SparkPlan, right: SparkPlan,
-    leftKey: Attribute, rightKey: Attribute,
-    leftTime: Attribute, rightTime: Attribute,
-    rightPayload: Seq[Attribute]) extends BinaryExecNode {
-
-  override def output: Seq[Attribute] = left.output ++ rightPayload
+/** The physical frame of a (key, time) merge of two sides, shared by
+  * [[AsOfJoinExec]] and [[IntervalAggExec]]: both sides clustered on
+  * their key and sorted by (key, time) within a partition — the
+  * requirements `EnsureRequirements` meets with the same exchanges and
+  * sorts as for a sort-merge join — and the output keeps the left
+  * side's partitioning and (key, time) order. */
+private[plans] trait KeyTimeMergeExec extends BinaryExecNode {
+  def leftKey: Attribute
+  def rightKey: Attribute
+  def leftTime: Attribute
+  def rightTime: Attribute
 
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(Seq(leftKey)) :: ClusteredDistribution(Seq(rightKey)) :: Nil
@@ -93,6 +88,47 @@ case class AsOfJoinExec(
     Seq(SortOrder(leftKey, Ascending), SortOrder(leftTime, Ascending))
 
   override def outputPartitioning: Partitioning = left.outputPartitioning
+}
+
+/** The analyzed sides of a (key, time) merge, shared by
+  * [[GraftPlans.asofJoin]] and [[IntervalAggPlans.trailingAgg]]: the
+  * right side gets fresh aliases, so no exprId collides with the left
+  * side when both frames derive from the same base relation (the native
+  * nodes are invisible to DeduplicateRelations). Checks, at call time,
+  * that the key types match — the merge compares keys with one ordering
+  * — and that both times are TIMESTAMP or BIGINT (epoch-µs). `op` names
+  * the operator in error messages. */
+private[plans] class KeyTimeSides(op: String, left: DataFrame, right: DataFrame,
+    key: (String, String), time: (String, String)) {
+  val lPlan: LogicalPlan = left.queryExecution.analyzed
+  val rPlan: LogicalPlan =
+    right.select(right.columns.map(c => col(c).as(c)).toIndexedSeq: _*).queryExecution.analyzed
+
+  /** The right side's column `name`; `side` labels it in the error. */
+  def rightAttr(name: String, side: String = "right"): Attribute = attr(rPlan.output, name, side)
+
+  private def attr(out: Seq[Attribute], name: String, side: String): Attribute =
+    out.find(_.name == name).getOrElse(throw new IllegalArgumentException(
+      s"$op: $side column '$name' not found in ${out.map(_.name)}"))
+
+  val leftKey: Attribute = attr(lPlan.output, key._1, "left")
+  val rightKey: Attribute = rightAttr(key._2)
+  val leftTime: Attribute = attr(lPlan.output, time._1, "left")
+  val rightTime: Attribute = rightAttr(time._2)
+  for (t <- Seq(leftTime, rightTime))
+    require(t.dataType == TimestampType || t.dataType == LongType,
+      s"$op: time column '${t.name}' must be TIMESTAMP or BIGINT, got ${t.dataType}")
+  require(leftKey.dataType == rightKey.dataType,
+    s"$op: key types differ: ${leftKey.dataType} vs ${rightKey.dataType}")
+}
+
+case class AsOfJoinExec(
+    left: SparkPlan, right: SparkPlan,
+    leftKey: Attribute, rightKey: Attribute,
+    leftTime: Attribute, rightTime: Attribute,
+    rightPayload: Seq[Attribute]) extends KeyTimeMergeExec {
+
+  override def output: Seq[Attribute] = left.output ++ rightPayload
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): AsOfJoinExec =
@@ -165,16 +201,8 @@ case class AsOfJoinExec(
   }
 }
 
-/** Registration + the user-facing API for the native plans. */
+/** The user-facing API for the native as-of join. */
 object GraftPlans {
-
-  /** Append [[AsOfJoinStrategy]] to an existing session (idempotent) —
-    * the imperative twin of `GraftExtensions`' injectPlannerStrategy. */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-  }
 
   /** Backward AS-OF inner join: for each left row, the columns of the
     * single right row with `rightKey == leftKey` and the greatest
@@ -186,27 +214,11 @@ object GraftPlans {
       key: (String, String), time: (String, String),
       payload: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
-    // fresh aliases on the right: guarantees no exprId collides with the
-    // left side when both frames derive from the same base relation
-    // (our node is invisible to DeduplicateRelations)
-    val r2 = right.select(right.columns.map(c => col(c).as(c)).toIndexedSeq: _*)
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = r2.queryExecution.analyzed
-    def attr(out: Seq[Attribute], name: String, side: String): Attribute =
-      out.find(_.name == name).getOrElse(throw new IllegalArgumentException(
-        s"asofJoin: $side column '$name' not found in ${out.map(_.name)}"))
-    val lk = attr(lPlan.output, key._1, "left")
-    val rk = attr(rPlan.output, key._2, "right")
-    val lt = attr(lPlan.output, time._1, "left")
-    val rt = attr(rPlan.output, time._2, "right")
-    for (t <- Seq(lt, rt))
-      require(t.dataType == TimestampType || t.dataType == LongType,
-        s"asofJoin: time column '${t.name}' must be TIMESTAMP or BIGINT, got ${t.dataType}")
-    require(lk.dataType == rk.dataType,
-      s"asofJoin: key types differ: ${lk.dataType} vs ${rk.dataType}")
-    val pay = payload.map(attr(rPlan.output, _, "payload"))
-    val node = AsOfJoinNode(lPlan, rPlan, lk, rk, lt, rt, pay)
+    GraftStrategy.setup(spark)
+    val sides = new KeyTimeSides("asofJoin", left, right, key, time)
+    import sides._
+    val node = AsOfJoinNode(lPlan, rPlan, leftKey, rightKey, leftTime, rightTime,
+      payload.map(rightAttr(_, "payload")))
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark, node)
   }
 }

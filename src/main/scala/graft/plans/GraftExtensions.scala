@@ -4,21 +4,47 @@ import graft.functions.{BpeIds, CosineSim, DotProduct, LshBuckets, SimHash32}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** Session extensions registering graft's native expressions, for
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. The same
-  * registrations are available imperatively via [[GraftFunctions.register]]
-  * for sessions created without the config (e.g. the driver's Verify). */
+/** Session extensions for `spark.sql.extensions=graft.plans.GraftExtensions`:
+  * graft's native expressions by name, for SQL text, and [[GraftStrategy]].
+  * The Scala API needs neither: operators build the expressions directly,
+  * and every native-plan entry point runs [[GraftStrategy.setup]]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    ext.injectPlannerStrategy(_ => GraftStrategy)
   }
+}
+
+/** The one planner strategy for graft's native logical nodes. */
+object GraftStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case AsOfJoinNode(l, r, lk, rk, lt, rt, pay) =>
+      AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, pay) :: Nil
+    case IntervalAggNode(l, r, lk, rk, lt, rt, rv, w, n, t) =>
+      IntervalAggExec(planLater(l), planLater(r), lk, rk, lt, rt, rv, w, n, t) :: Nil
+    case TopKPerKeyNode(c, key, order, tid, k, rank) =>
+      // the partial/final split HashAggregate gets, hand-planned: the
+      // exchange between them (inserted by EnsureRequirements for the
+      // final's ClusteredDistribution) sees only per-partition top-k
+      // survivors
+      TopKPerKeyExec(
+        TopKPerKeyExec(planLater(c), key, order, tid, k, rank, partial = true),
+        key, order, tid, k, rank, partial = false) :: Nil
+    case _ => Nil
+  }
+
+  /** Make `spark`'s planner hold this strategy (idempotent: a session
+    * built with [[GraftExtensions]] already holds it). */
+  def setup(spark: SparkSession): Unit =
+    if (!spark.sessionState.planner.strategies.contains(this))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ this
 }
 
 object GraftFunctions {
@@ -76,7 +102,7 @@ object GraftFunctions {
       (args: Seq[Expression]) => BloomFilterMightContain(args(0), args(1))),
   )
 
-  /** Imperative registration on an existing session. */
+  /** Imperative registration on an existing session, for SQL text. */
   def register(spark: SparkSession): Unit =
     all.foreach { case (name, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(

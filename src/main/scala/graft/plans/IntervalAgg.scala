@@ -5,13 +5,11 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, BindReferences, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, LongType, TimestampType}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, LongType}
 
 /** TRAILING-WINDOW AGGREGATE JOIN — the second native whole-operator
   * plan (after [[AsOfJoinNode]]): for every left row, the COUNT and
@@ -56,34 +54,14 @@ case class IntervalAggNode(
     copy(left = newLeft, right = newRight)
 }
 
-object IntervalAggStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case IntervalAggNode(l, r, lk, rk, lt, rt, rv, w, n, t) =>
-      IntervalAggExec(planLater(l), planLater(r), lk, rk, lt, rt, rv, w, n, t) :: Nil
-    case _ => Nil
-  }
-}
-
 case class IntervalAggExec(
     left: SparkPlan, right: SparkPlan,
     leftKey: Attribute, rightKey: Attribute,
     leftTime: Attribute, rightTime: Attribute,
     rightValue: Attribute, windowUs: Long,
-    nAttr: AttributeReference, totalAttr: AttributeReference) extends BinaryExecNode {
+    nAttr: AttributeReference, totalAttr: AttributeReference) extends KeyTimeMergeExec {
 
   override def output: Seq[Attribute] = left.output :+ nAttr :+ totalAttr
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(leftKey)) :: ClusteredDistribution(Seq(rightKey)) :: Nil
-
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    Seq(SortOrder(leftKey, Ascending), SortOrder(leftTime, Ascending)),
-    Seq(SortOrder(rightKey, Ascending), SortOrder(rightTime, Ascending)))
-
-  override def outputOrdering: Seq[SortOrder] =
-    Seq(SortOrder(leftKey, Ascending), SortOrder(leftTime, Ascending))
-
-  override def outputPartitioning: Partitioning = left.outputPartitioning
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): IntervalAggExec =
@@ -173,39 +151,22 @@ case class IntervalAggExec(
 
 object IntervalAggPlans {
 
-  /** Append [[IntervalAggStrategy]] to an existing session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(IntervalAggStrategy))
-      spark.experimental.extraStrategies = cur :+ IntervalAggStrategy
-  }
-
   /** For each left row: count + exact-decimal sum (`xsum` semantics,
     * emitted as DECIMAL(28,2)) of right rows with the same key in the
     * trailing window [leftTime − windowUs, leftTime). Left-outer: every
-    * left row emits. Output = left columns + (nName, totalName). */
+    * left row emits. Output = left columns + (nName, totalName). The
+    * key types must match; times must be TIMESTAMP or BIGINT (epoch-µs). */
   def trailingAgg(left: DataFrame, right: DataFrame,
       key: (String, String), time: (String, String), valueCol: String,
       windowUs: Long, nName: String, totalName: String): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
-    val r2 = right.select(right.columns.map(c => col(c).as(c)).toIndexedSeq: _*)
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = r2.queryExecution.analyzed
-    def attr(out: Seq[Attribute], name: String, side: String): Attribute =
-      out.find(_.name == name).getOrElse(throw new IllegalArgumentException(
-        s"trailingAgg: $side column '$name' not found in ${out.map(_.name)}"))
-    val lk = attr(lPlan.output, key._1, "left")
-    val rk = attr(rPlan.output, key._2, "right")
-    val lt = attr(lPlan.output, time._1, "left")
-    val rt = attr(rPlan.output, time._2, "right")
-    val rv = attr(rPlan.output, valueCol, "right")
-    for (t <- Seq(lt, rt))
-      require(t.dataType == TimestampType || t.dataType == LongType,
-        s"trailingAgg: time column '${t.name}' must be TIMESTAMP or BIGINT, got ${t.dataType}")
+    GraftStrategy.setup(spark)
+    val sides = new KeyTimeSides("trailingAgg", left, right, key, time)
+    import sides._
+    val rv = rightAttr(valueCol)
     require(rv.dataType == DoubleType,
       s"trailingAgg: value column '$valueCol' must be DOUBLE, got ${rv.dataType}")
-    val node = IntervalAggNode(lPlan, rPlan, lk, rk, lt, rt, rv, windowUs,
+    val node = IntervalAggNode(lPlan, rPlan, leftKey, rightKey, leftTime, rightTime, rv, windowUs,
       AttributeReference(nName, LongType, nullable = false)(),
       AttributeReference(totalName, DecimalType(28, 2), nullable = false)())
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark, node)

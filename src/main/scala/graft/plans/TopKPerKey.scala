@@ -7,8 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.types.LongType
 
 /** GROUPED TOP-K — the third native whole-operator plan (after
@@ -76,20 +75,6 @@ case class TopKPerKeyNode(
     AttributeSet(child.output) // all child columns ride through
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerKeyNode =
     copy(child = newChild)
-}
-
-object TopKPerKeyStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKeyNode(c, key, order, tid, k, rank) =>
-      // the partial/final split HashAggregate gets, hand-planned: the
-      // exchange between them (inserted by EnsureRequirements for the
-      // final's ClusteredDistribution) sees only per-partition top-k
-      // survivors
-      TopKPerKeyExec(
-        TopKPerKeyExec(planLater(c), key, order, tid, k, rank, partial = true),
-        key, order, tid, k, rank, partial = false) :: Nil
-    case _ => Nil
-  }
 }
 
 case class TopKPerKeyExec(
@@ -283,13 +268,6 @@ case class TopKPerKeyExec(
 
 object TopKPlans {
 
-  /** Append [[TopKPerKeyStrategy]] to an existing session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies = cur :+ TopKPerKeyStrategy
-  }
-
   /** Per `keyCol`, the `k` best rows under (`orderCol` desc NULLS
     * LAST, `idCol` asc NULLS LAST), with a 1-based `rankName` column
     * appended — NULL keys form their own group, exactly as the window
@@ -298,7 +276,7 @@ object TopKPlans {
   def topKPerKey(df: DataFrame, keyCol: String, orderCol: String,
       idCol: String, k: Int, rankName: String): DataFrame = {
     val spark = df.sparkSession
-    register(spark)
+    GraftStrategy.setup(spark)
     val plan = df.queryExecution.analyzed
     def attr(name: String): Attribute =
       plan.output.find(_.name == name).getOrElse(throw new IllegalArgumentException(

@@ -51,6 +51,19 @@ class IntervalAggSpec extends SparkSpec {
     assert(gotN == ((2L, 2.0)), s"got $gotN")
   }
 
+  test("native interval agg: mismatched key types fail at call time") {
+    val s = spark
+    import s.implicits._
+    // the merge compares both keys with one ordering: an INT left key
+    // against a BIGINT right key must be refused, not merged
+    val left = Seq((1, 10L, 1000L)).toDF("k", "lid", "lt")
+    val right = Seq((1L, 900L, 1.0)).toDF("k2", "rt", "value")
+    val e = intercept[IllegalArgumentException](IntervalAggPlans.trailingAgg(left, right,
+      key = ("k", "k2"), time = ("lt", "rt"), valueCol = "value",
+      windowUs = 100L, nName = "n", totalName = "total"))
+    assert(e.getMessage.contains("key types differ"), e.getMessage)
+  }
+
   test("native interval agg: subtract-on-evict stays exact over drift-prone decimals") {
     val s = spark
     import s.implicits._

@@ -60,6 +60,7 @@ class PinSpec extends SparkSpec {
       "wc_bfs" -> (() => WordCount.bfs(docs)),
       "wc_bfs_rec" -> (() => WordCount.bfsRecursive(docs)),
       "wc_cc" -> (() => WordCount.components(docs)),
+      "wc_mst" -> (() => WordCount.mst(docs)),
       "wc_sssp" -> (() => WordCount.sssp(docs)),
       "wc_kcore" -> (() => WordCount.kcore(docs)),
       "ann_graph_cluster" -> (() => Similarity.graphClusters(em)),

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM per `sbt test`). */
+/** Shared local SparkSession for all suites (one JVM per `sbt test`).
+  * It registers nothing of graft's: the Scala API must work without
+  * registration, and SQL-text specs register for themselves. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -16,7 +18,6 @@ object SparkSpec {
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.register(s)
     s
   }
   val sf: String = "/root/testdata/sf0.001"
