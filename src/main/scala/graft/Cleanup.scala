@@ -5,8 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Library-level storage cleanup for long-lived sessions.
   *
   * Two kinds of storage survive a query that composed the iterative
-  * operators ([[operators.Dedup.minhashClusters]],
-  * [[operators.Dedup.connectedComponents]],
+  * operators ([[operators.Dedup.connectedComponents]] and its callers,
   * [[operators.TrainingPipeline.stages]]):
   *
   *  - CacheManager-tracked relations (`persist()`), dropped by

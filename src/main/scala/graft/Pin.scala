@@ -13,13 +13,18 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * releases its rounds through it — label propagation (`wc_lpa`,
   * `ann_graph_cluster`), the beam walk (`ann_graph_search`,
   * `ann_graph_search_pq`, the beam calibration probe), `wc_bfs`,
-  * `wc_sssp`, `wc_kcore` and the perceptron epochs (`text_train`).
-  * Those operators free their own intermediates; only the returned
-  * frame remains for the caller. `Dedup.connectedComponents` runs to
-  * convergence, not for a fixed count, so it loops itself: each round
-  * is one [[eager]] pin carrying its convergence witness, superseded
-  * rounds are freed, and only its pinned roots remain. The
-  * `minhashClusters` convergence loop keeps its own policy.
+  * `wc_sssp`, `wc_kcore`, the perceptron epochs (`text_train`), the
+  * TextRank epochs (`text_textrank`), the BPE merges
+  * (`text_bpe_train`, `text_bpe_learned`) and Lloyd's codebook
+  * iterations (`Similarity.trainCodebook`, behind every trained IVF
+  * and PQ codebook). Those operators free their own intermediates;
+  * only the returned frame remains for the caller.
+  * `Dedup.connectedComponents` runs to convergence, not for a fixed
+  * count, so it loops itself: each round is one [[eager]] pin carrying
+  * its convergence witness, superseded rounds are freed, and only its
+  * pinned roots remain. Every convergence loop (`wc_cc`,
+  * `dedup_cluster`, the multi-signal and incremental clusterings) runs
+  * on it; these two are the only round loops in the operators.
   *
   * Why pin at all: each iteration of these operators consumes its own
   * output. Un-truncated, the logical plan doubles per round — analysis

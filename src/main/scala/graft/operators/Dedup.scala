@@ -250,22 +250,6 @@ object Dedup {
   def minhashPairs(docs: DataFrame): DataFrame =
     minhashCandidates(docs).orderBy("doc_a", "doc_b")
 
-  /** Distinct candidate pairs (doc_a < doc_b) — the unsorted core of
-    * [[minhashPairs]], reused by [[minhashClusters]] and the multi-signal
-    * pipelines.
-    *
-    * The banded index is MATERIALIZED (eager localCheckpoint) before the
-    * self-join: AQE does not reuse the map-only banded subplan across the
-    * join's two sides (verified), so the declarative form would run the
-    * full shingle+hash pass over the corpus TWICE — the single most
-    * expensive map stage in the family, and 2× CPU at any scale. The
-    * checkpoint is (doc_id, band, band_hash) — 4 short rows per doc,
-    * a sliver of the corpus — and both join sides read it back instead.
-    * Caller-must-clear contract as everywhere: the blocks free on
-    * [[graft.Cleanup.releaseAll]] (a production run would instead write
-    * [[minhashBands]] to a bucketed table and self-join the stored
-    * index). Measured at sf0.1: dedup_minhash_pairs 2.2→1.5 s,
-    * dedup_combined 4.7→3.4 s. */
   /** MINHASH AS AN ESTIMATOR (`dedup_minhash_est`) — the sketch-error
     * honesty gate for the dedup family (what q38_hll's rel_err column
     * is for cardinality): for every LSH candidate pair, the signature
@@ -404,6 +388,25 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
+  /** Distinct candidate pairs (doc_a < doc_b) — the unsorted core of
+    * [[minhashPairs]], reused by [[minhashClusters]] and the multi-signal
+    * pipelines.
+    *
+    * The banded index is MATERIALIZED (eager localCheckpoint) before the
+    * self-join: AQE does not reuse the map-only banded subplan across the
+    * join's two sides (verified), so the declarative form would run the
+    * full shingle+hash pass over the corpus TWICE — the single most
+    * expensive map stage in the family, and 2× CPU at any scale. The
+    * checkpoint is (doc_id, band, band_hash) — 4 short rows per doc,
+    * a sliver of the corpus — and both join sides read it back instead.
+    * The returned frame reads that pin lazily, so the caller frees it
+    * ([[graft.Cleanup.freePins]] on the pairs) once the pairs are
+    * consumed: [[minhashClusters]] does so after its components are
+    * pinned; the lazy pair keys leave it to
+    * [[graft.Cleanup.releaseAll]] (a production run would instead write
+    * [[minhashBands]] to a bucketed table and self-join the stored
+    * index). Measured at sf0.1: dedup_minhash_pairs 2.2→1.5 s,
+    * dedup_combined 4.7→3.4 s. */
   private def minhashCandidates(docs: DataFrame): DataFrame = {
     val b = minhashBanded(docs).pinned
     val l = b.select(col("doc_id").as("doc_a"), col("band"), col("band_hash"))
@@ -463,7 +466,7 @@ object Dedup {
   def incrementalClusters(existing: DataFrame, fresh: DataFrame, allDocs: DataFrame,
                           indexPath: String, labelsPath: String): DataFrame = {
     if (!graft.sources.Fixtures.ready(labelsPath))
-      minhashClustersLS(existing).write
+      minhashClusters(existing).write
         .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(labelsPath)
     val oldLabels = existing.sparkSession.read.parquet(labelsPath)
     val starEdges = oldLabels.where(col("doc_id") =!= col("cluster_id"))
@@ -507,63 +510,23 @@ object Dedup {
   /** Near-duplicate CLUSTERS: connected components over the MinHash
     * candidate-pair graph, labelling every document with the minimum
     * doc_id of its component (the canonical survivor a training pipeline
-    * keeps). Iterative min-label propagation: each round every node takes
-    * the min of its own label and its neighbours' labels; labels only
-    * decrease, so the exact-integer label sum is a monotone convergence
-    * witness. Rounds = component diameter — LSH dup components are tiny
-    * chains, so this converges in a handful of rounds (a planet-scale
-    * graph would switch to the two-phase large-star/small-star
-    * formulation, same per-round join shape). Each round persists its
-    * labels and unpersists the previous round, so lineage stays O(1);
-    * the RETURNED frame stays cached (it backs the lazily-consumed
-    * result — MEMORY_AND_DISK, evictable) and long-lived sessions may
-    * `unpersist()` it when done. */
+    * keeps). Runs on [[connectedComponents]] (alternating large-star /
+    * small-star rounds, Kiveris et al., "Connected Components in
+    * MapReduce and Beyond", 2014, with a union-find finish): O(log²)
+    * rounds whatever the component DIAMETER, where min-label
+    * propagation needs diameter-many rounds (a million-doc near-dup
+    * chain would take a million). Each round is work over the edge set
+    * only — the corpus is never touched after candidate generation.
+    * The banded index [[minhashCandidates]] pins is freed once the
+    * components are pinned, so the returned lazy frame keeps only
+    * [[connectedComponents]]' pinned roots alive. `dedup_cluster` and
+    * `dedup_cluster_ls` both gate it against the same closure oracle. */
   def minhashClusters(docs: DataFrame): DataFrame = {
     val pairs = minhashCandidates(docs)
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist()
-    var labels = docs.select(col("doc_id"), col("doc_id").as("cluster_id")).persist()
-    // sum() over zero rows is NULL — an empty corpus must converge
-    // immediately, not NPE
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("cluster_id").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var done = false
-    while (!done) {
-      val nbrMin = edges.join(labels, col("src") === col("doc_id"))
-        .select(col("dst"), col("cluster_id").as("nl"))
-        .groupBy("dst").agg(min("nl").as("nbr_min"))
-      val next = labels.join(nbrMin, col("doc_id") === col("dst"), "left_outer")
-        .select(col("doc_id"),
-          least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
-            .as("cluster_id"))
-        .persist()
-      val nextSum = labelSum(next)
-      labels.unpersist()
-      labels = next
-      done = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-    }
-    edges.unpersist()
-    labels.select(col("doc_id"), col("cluster_id"),
-        (col("doc_id") === col("cluster_id")).cast("long").as("is_canonical"))
-      .orderBy("doc_id")
+    val res = connectedComponents(docs.select(col("doc_id")), pairs)
+    graft.Cleanup.freePins(pairs)
+    res
   }
-
-  /** The same connected components via alternating LARGE-STAR /
-    * SMALL-STAR rounds (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", 2014) — the planet-scale formulation:
-    * converges in O(log²) rounds regardless of component DIAMETER,
-    * where plain min-label propagation needs diameter-many rounds (a
-    * pathological million-doc near-dup chain would take a million).
-    * Each round is two grouped joins over the edge set only — the
-    * corpus is never touched after candidate generation. Shares the
-    * `dedup_cluster` oracle, so the two implementations are
-    * machine-checked equivalent, not assumed. */
-  def minhashClustersLS(docs: DataFrame): DataFrame =
-    connectedComponents(docs.select(col("doc_id")), minhashCandidates(docs))
 
   /** Large-star/small-star connected components over ANY pair relation
     * (doc_a, doc_b) — reusable for whatever candidate generator produced
@@ -719,7 +682,7 @@ object Dedup {
     * the best-quality member of each near-duplicate cluster, not the
     * lowest doc_id — lowest-id selection systematically biases toward
     * whatever happened to be ingested first. Components come from
-    * [[minhashClustersLS]] (the scale-path clustering); the quality
+    * [[minhashClusters]]; the quality
     * score is [[TextAnalysis.qualityScoreCol]] evaluated inline in the
     * scan (no metric-table join); ties break on doc_id for determinism.
     * A map-side-combinable min(struct) argmax over the cluster key picks
@@ -727,7 +690,7 @@ object Dedup {
     * in one window partition. */
   def bestRepresentatives(docs: DataFrame): DataFrame =
     representatives(
-      minhashClustersLS(docs),
+      minhashClusters(docs),
       docs.select(col("doc_id"), TextAnalysis.qualityScoreCol.as("quality")))
 
   /** Representatives over PRECOMPUTED clusters: pipelines that already
@@ -1214,7 +1177,7 @@ object Dedup {
     "dedup_minhash_est"    -> ((s, d) => minhashEstimate(Tables.documents(s, d))),
     "dedup_minhash_thresh" -> ((s, d) => minhashThresholded(Tables.documents(s, d))),
     "dedup_cluster"        -> ((s, d) => minhashClusters(Tables.documents(s, d))),
-    "dedup_cluster_ls"     -> ((s, d) => minhashClustersLS(Tables.documents(s, d))),
+    "dedup_cluster_ls"     -> ((s, d) => minhashClusters(Tables.documents(s, d))),
     "dedup_best"           -> ((s, d) => bestRepresentatives(Tables.documents(s, d))),
     "dedup_combined"       -> ((s, d) =>
       combinedClusters(Tables.documents(s, d), Tables.embeddings(s, d))),

@@ -330,10 +330,12 @@ object Similarity {
     val em = Tables.embeddings(s, d)
     val dir = mipsCodebookPath(d)
     val aug = augmented(em).persist()
-    if (!graft.sources.Fixtures.ready(dir))
-      trainCodebook(aug.select(col("vec_id"), col("av").as("embedding")))
-        .select(col("cent_id"), transform(col("cv"), x => x.cast("float")).as("cv"))
+    if (!graft.sources.Fixtures.ready(dir)) {
+      val cents = trainCodebook(aug.select(col("vec_id"), col("av").as("embedding")))
+      cents.select(col("cent_id"), transform(col("cv"), x => x.cast("float")).as("cv"))
         .write.mode("overwrite").parquet(dir)
+      graft.Cleanup.freeCheckpoint(cents)
+    }
     mipsIvfWith(em, aug, readCodebook(s, dir))
   }
 
@@ -657,15 +659,18 @@ object Similarity {
     * cosines, per-vector top-1 via the rank window) and one element-wise
     * mean (posexplode → (cell, dim) avg → array rebuild): every stage is
     * map-side or K×Dim-sized, so training scales to the corpus linearly.
+    * The `iters` (≥ 1) iterations run through [[graft.Pin.rounds]]: the
+    * returned codebook is pinned and is the only storage left, freed by
+    * callers that only write it.
     * Empty cells drop out (K may shrink) — the persisted table IS the
     * model. Reference analogue: the fixed reducer-count codebooks of
     * /root/reference/core/map_reduce.go partition work the same way. */
   def trainCodebook(em: DataFrame, k: Int = TrainedK, iters: Int = LloydIters): DataFrame = {
     val vecs = em.select(col("vec_id"), vec(col("embedding")).as("v"))
-    var cents = vecs
+    val seeds = vecs
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    for (_ <- 1 to iters) {
+    def lloyd(cents: DataFrame, i: Int): DataFrame = {
       val w = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cent_id"))
       // rank window over SKINNY (vec_id, cent_id, ccos) triples — the
       // 64-dim vectors never ride the n·K shuffle; they join back by id
@@ -674,15 +679,15 @@ object Similarity {
         .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select("vec_id", "cent_id")
       val assigned = top1.join(vecs, "vec_id")
-      cents = assigned
+      assigned
         .select(col("cent_id"), posexplode(col("v")).as(Seq("i", "x")))
         .groupBy("cent_id", "i").agg(avg("x").as("m"))
         .groupBy("cent_id")
         .agg(array_sort(collect_list(struct(col("i"), col("m")))).as("sm"))
         .select(col("cent_id"), transform(col("sm"), e => e.getField("m")).as("cv"))
-        .pinned // truncate the per-iteration lineage
     }
-    cents
+    // the last iteration is the kernel's finish: `iters` pins in all
+    Pin.rounds("trainCodebook", seeds, iters - 1)(lloyd)(lloyd(_, iters))
   }
 
   /** Where the persisted codebook for `sfDir`'s embeddings lives —
@@ -696,10 +701,12 @@ object Similarity {
     graft.sources.Fixtures.dirFor("ivf_codebook2", sfDir, "embeddings")
 
   /** Write the trained codebook in the persisted layout (float cv). */
-  private def persistCodebook(em: DataFrame, dir: String): Unit =
-    trainCodebook(em)
-      .select(col("cent_id"), transform(col("cv"), x => x.cast("float")).as("cv"))
+  private def persistCodebook(em: DataFrame, dir: String): Unit = {
+    val cents = trainCodebook(em)
+    cents.select(col("cent_id"), transform(col("cv"), x => x.cast("float")).as("cv"))
       .write.mode("overwrite").parquet(dir)
+    graft.Cleanup.freeCheckpoint(cents)
+  }
 
   /** Read the persisted codebook back as (cent_id, cv double[]) — the
     * shape every cosine stage consumes. */
@@ -969,28 +976,6 @@ object Similarity {
   /** Deterministic random out-degree seeding the NN-descent round. */
   val NndRndInit = 3
 
-  /** α-RNG edge-diversification dial (DiskANN/Vamana's α, Subramanya
-    * et al., NeurIPS 2019; α = 1.2 is the published default): candidate
-    * c is OCCLUDED by a closer-ranked neighbor r when c sits (much)
-    * nearer to r than to the vector itself — keeping c then buys no new
-    * reach, it re-points at r's neighborhood. In cosine distance the
-    * Vamana rule α·d(r,c) ≤ d(q,c) becomes
-    * cos(r,c) ≥ 1 − (1 − cos(q,c))/α.
-    *
-    * OPT-IN, default OFF — a measured decision (§5c-r14): at the
-    * UNDER-SIZED r13 beam the prune genuinely helps the adversarial
-    * ×100 corpus (recall@5 0.544 → 0.598 at beam 75), but once the
-    * beam derives from the measured √n calibration
-    * ([[graft.Dials.BeamRecallC]]) the diversified and plain graphs
-    * search identically (0.960 vs 0.960 at ×100, 0.970 vs 0.970 at
-    * sf0.1) while the prune's pair pass costs ~2× build wall at the
-    * production degree. A deployment that must run a NARROW beam
-    * (latency-bound serving) sets `SPARK_GRAFT_ALPHA_RNG=1.2` and both
-    * engines derive the α chain together (the oracle is built in the
-    * running JVM, after the env is visible — the Dials contract). */
-  def AlphaRng: Option[Double] =
-    sys.env.get("SPARK_GRAFT_ALPHA_RNG").map(_.toDouble)
-
   /** Candidate-list width the α-prune selects from, as a multiple of
     * the kept degree: top-2k by cosine, diversified down to k. */
   val AlphaCandFactor = 2
@@ -1014,7 +999,7 @@ object Similarity {
     * (rounds are a dial; each further round is this operator over its
     * own output ∪ fresh random edges). The keep step is [[alphaPrune]]:
     * plain exact-cosine top-k by default, the DiskANN/Vamana α-RNG
-    * occlusion prune under the opt-in [[AlphaRng]] dial (see the dial's
+    * occlusion prune when `alpha` is set (see [[AlphaDefault]] for the
     * measured rationale). Output shape = the graph's
     * (vec_id, rank, neighbor_id); since cand ⊇ the cell edges and
     * rank-1 is never occluded on either path, every vector's rank-1
@@ -1038,19 +1023,29 @@ object Similarity {
       .select(col("vec_id"), col("rank"), col("neighbor_id"))
       .orderBy("vec_id", "rank")
 
-  /** The published DiskANN/Vamana α default (Subramanya et al. 2019). */
+  /** α-RNG edge diversification (DiskANN/Vamana's α, Subramanya et
+    * al., NeurIPS 2019; 1.2 is the published default): candidate c is
+    * OCCLUDED by a closer-ranked neighbor r when c sits (much) nearer
+    * to r than to the vector itself — keeping c then buys no new reach,
+    * it re-points at r's neighborhood. In cosine distance the Vamana
+    * rule α·d(r,c) ≤ d(q,c) becomes cos(r,c) ≥ 1 − (1 − cos(q,c))/α.
+    *
+    * OFF by default — a measured decision (§5c-r14): at the
+    * UNDER-SIZED r13 beam the prune genuinely helps the adversarial
+    * ×100 corpus (recall@5 0.544 → 0.598 at beam 75), but once the
+    * beam derives from the measured √n calibration
+    * ([[graft.Dials.BeamRecallC]]) the diversified and plain graphs
+    * search identically (0.960 vs 0.960 at ×100, 0.970 vs 0.970 at
+    * sf0.1) while the prune's pair pass costs ~2× build wall at the
+    * production degree. A caller that must run a NARROW beam
+    * (latency-bound serving) passes `alpha` to [[nnDescentEdges]];
+    * `ann_nn_descent_alpha` gates that arm at this value. */
   val AlphaDefault = 1.2
 
-  /** `ann_nn_descent_alpha` (r15, ADVICE r14): the NN-descent round
-    * with the α-RNG occlusion keep step FORCED ON at [[AlphaDefault]] —
-    * not env-dependent, so the α arm (Spark prune AND its SQL mirror)
-    * is DuckDB-gated EVERY round. Until now the mirror was only
-    * generated when a deployment set `SPARK_GRAFT_ALPHA_RNG`, leaving
-    * the SQL side of an advertised dial unverified by the default gate
-    * run; this key closes that hole the same way every other dial is
-    * closed — with a standing oracle. The env dial is unchanged (it
-    * still switches the DEFAULT keys' keep step, both engines
-    * together). */
+  /** `ann_nn_descent_alpha` (r15): the NN-descent round with the α-RNG
+    * occlusion keep step ON at [[AlphaDefault]], so the α arm (the
+    * Spark prune AND its SQL mirror) is DuckDB-gated every run; the
+    * default keys keep the plain top-k. */
   def nnDescentAlpha(em: DataFrame): DataFrame =
     nnDescentEdges(em, KnnK, Some(AlphaDefault))
       .select(col("vec_id"), col("rank"), col("neighbor_id"))
@@ -1062,7 +1057,7 @@ object Similarity {
     * build's own pinned and cached intermediates are freed before it
     * returns. */
   private[graft] def nnDescentEdges(em: DataFrame, k: Int = KnnK,
-                                    alpha: Option[Double] = AlphaRng,
+                                    alpha: Option[Double] = None,
                                     hop2Bands: Int = graft.Dials.nndHop2Bands): DataFrame = {
     val cell = knnEdges(em, k).select(col("vec_id"), col("neighbor_id"))
     val nRow = broadcast(em.agg(count(lit(1)).as("n_corpus")))
@@ -1203,7 +1198,7 @@ object Similarity {
         // knnEdges fusion note; duplicate (a, b) rows score identically
         .repartition(col("vec_id"))
         .dropDuplicates()
-      val out = alphaPrune(scored, qv, k, alpha).pinned
+      val out = alphaPrune(scored, qv, k, alpha)
       gv.unpersist(false)
       out
     } else {
@@ -1267,7 +1262,7 @@ object Similarity {
         acc = next
       }
       System.gc() // reap the last band before the keep step's own jobs
-      val out = alphaPrune(acc, qv, k, alpha).pinned
+      val out = alphaPrune(acc, qv, k, alpha)
       graft.Cleanup.freeCheckpoint(acc)
       out
     }
@@ -1278,8 +1273,8 @@ object Similarity {
 
   /** The KEEP step over a scored candidate frame
     * (vec_id, neighbor_id, cos) with vectors `qv` (vec_id, v). Default
-    * ([[AlphaRng]] unset): plain exact-cosine top-k through the native
-    * grouped top-k exec. Under the opt-in α dial: α-RNG EDGE
+    * (`alpha` = None): plain exact-cosine top-k through the native
+    * grouped top-k exec. With `alpha` set: α-RNG EDGE
     * DIVERSIFICATION (DiskANN/Vamana's RobustPrune) — a plain cosine
     * top-k keeps k near-parallel edges, all pointing INTO the vector's
     * own cell on a clustered corpus, and the far candidates (the
@@ -1302,17 +1297,19 @@ object Similarity {
     * cell-width² and never corpus×corpus); the candidate vector
     * attaches to the n·L topl frame once and pairs form by a vec_id
     * self-join whose cosine evaluates in the projection, so nothing
-    * pair-sized ever shuffles fat. */
+    * pair-sized ever shuffles fat.
+    *
+    * Returned pinned on both paths; the α path's `topl` cache is freed
+    * before it returns. */
   private[graft] def alphaPrune(scored: DataFrame, qv: DataFrame, k: Int,
-                                alpha: Option[Double] = AlphaRng): DataFrame = {
+                                alpha: Option[Double] = None): DataFrame = {
     if (alpha.isEmpty)
       return graft.plans.TopKPlans.topKPerKey(scored, "vec_id", "cos", "neighbor_id", k, "rank")
-        .select(col("vec_id"), col("rank"), col("neighbor_id"))
+        .select(col("vec_id"), col("rank"), col("neighbor_id")).pinned
     val L = AlphaCandFactor * k
     // persisted: referenced three times below (both pair sides + the
     // final keep) — unpersisted it would recompute the full candidate
-    // re-rank each time; freed by the suite-level releaseAll, the same
-    // contract as the seed graph `g` above
+    // re-rank each time; freed once the kept edges are pinned
     val topl = graft.plans.TopKPlans
       .topKPerKey(scored, "vec_id", "cos", "neighbor_id", L, "crank")
       .select(col("vec_id"), col("neighbor_id"), col("cos"), col("crank"))
@@ -1351,8 +1348,10 @@ object Similarity {
       .select(col("vec_id"), col("neighbor_id"),
         (-(coalesce(col("occl"), lit(0)).cast("long") * (L + 1) + col("crank")))
           .as("ordv"))
-    graft.plans.TopKPlans.topKPerKey(ranked2, "vec_id", "ordv", "neighbor_id", k, "rank")
-      .select(col("vec_id"), col("rank"), col("neighbor_id"))
+    val res = graft.plans.TopKPlans.topKPerKey(ranked2, "vec_id", "ordv", "neighbor_id", k, "rank")
+      .select(col("vec_id"), col("rank"), col("neighbor_id")).pinned
+    topl.unpersist(false)
+    res
   }
 
   /** Traversal dials — CORPUS-DERIVED since r13 ([[graft.Dials]]): the
@@ -1789,8 +1788,11 @@ object Similarity {
           transform(col("cv"), x => x.cast("float")).as("cv"))
     }.reduce(_ unionAll _)
 
-  private def persistPqCodebook(em: DataFrame, dir: String): Unit =
-    trainPqCodebook(em).write.mode("overwrite").parquet(dir)
+  private def persistPqCodebook(em: DataFrame, dir: String): Unit = {
+    val cents = trainPqCodebook(em)
+    cents.write.mode("overwrite").parquet(dir)
+    graft.Cleanup.freePins(cents)
+  }
 
   private def readPqCodebook(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(dir).select(col("m"), col("cent_id"), vec(col("cv")).as("cv"))
@@ -2441,13 +2443,13 @@ object Similarity {
     * rank, neighbor_id)`): stride centroids → closure assignment →
     * hub-capped cell edges → deterministic random seed edges → forward
     * ∪ reverse ∪ 2-hop candidates → the keep step ([[refinedKeepSql]]:
-    * exact-cosine top-k by default; the α-RNG occlusion prune under
-    * the opt-in [[AlphaRng]] dial). Shared verbatim by
+    * exact-cosine top-k by default; the α-RNG occlusion prune when
+    * `alpha` is set). Shared verbatim by
     * the `ann_nn_descent` gate (at [[KnnK]]) and the `ann_graph_search`
     * traversal (at the [[graft.Dials.graphDegree]] production degree) —
     * the same chain, so a drift in either arm fails its gate. */
   private def nndRefinedCtesSql(k: Int = KnnK,
-                                alpha: Option[Double] = AlphaRng): String =
+                                alpha: Option[Double] = None): String =
     s"""cents AS (
        |  SELECT vec_id AS cent_id, $V AS cv FROM embeddings
        |  WHERE vec_id % $CentroidStride = 0),
@@ -2490,12 +2492,11 @@ object Similarity {
        |${refinedKeepSql(k, alpha)}""".stripMargin
 
   /** The keep step of the refined chain: plain exact-cosine top-`k`
-    * when the α dial is unset (the default), the α-RNG
-    * occlusion-prune/backfill chain when it is — the SQL mirror of
-    * [[alphaPrune]]'s two paths, selected by the SAME dial in the same
-    * JVM. */
+    * when `alpha` is None (the default), the α-RNG
+    * occlusion-prune/backfill chain when it is set — the SQL mirror of
+    * [[alphaPrune]]'s two paths, selected by the same `alpha`. */
   private def refinedKeepSql(k: Int,
-      alpha: Option[Double] = AlphaRng): String = alpha match {
+      alpha: Option[Double] = None): String = alpha match {
     case None =>
       s"""refined AS MATERIALIZED (
          |  SELECT vec_id, rank, neighbor_id FROM (
@@ -3061,10 +3062,8 @@ object Similarity {
       s"""WITH ${nndRefinedCtesSql()}
          |SELECT vec_id, rank, neighbor_id FROM refined
          |ORDER BY vec_id, rank""".stripMargin,
-    // the SAME chain with the α-RNG keep step FORCED at AlphaDefault —
-    // the dial's SQL arm gated unconditionally (ADVICE r14: it was
-    // generated only under the env opt-in, so the default gate run
-    // never cross-checked it against alphaPrune)
+    // the SAME chain with the α-RNG keep step at AlphaDefault — the
+    // α arm's SQL mirror, gated against alphaPrune every run
     "ann_nn_descent_alpha" ->
       s"""WITH ${nndRefinedCtesSql(KnnK, Some(AlphaDefault))}
          |SELECT vec_id, rank, neighbor_id FROM refined

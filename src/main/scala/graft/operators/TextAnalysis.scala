@@ -982,14 +982,21 @@ object TextAnalysis {
     * single symbol) ⇒ later rounds emit nothing and the output is
     * short — degenerate corpora shrink the merge table, as real
     * trainers do. */
-  def bpeTrain(docs: DataFrame): DataFrame =
-    bpeTrainRounds(docs, BpeTrainMerges)._1.orderBy("step")
+  def bpeTrain(docs: DataFrame): DataFrame = {
+    val (merges, vocab) = bpeTrainRounds(docs, BpeTrainMerges)
+    graft.Cleanup.freeCheckpoint(vocab)
+    merges.orderBy("step")
+  }
 
   /** The training loop shared by [[bpeTrain]] (which reads the learned
     * MERGES) and [[bpeLearnedTokens]] (which reads the final learned
     * SEGMENTATION): returns (merges, vocab), where vocab is one row per
     * distinct word — (word, w_cnt, seq) with seq the pipe-delimited
-    * symbol sequence AFTER `rounds` merges applied in learned order. */
+    * symbol sequence AFTER `rounds` (≥ 1) merges applied in learned
+    * order. The merges run through [[graft.Pin.rounds]] with vocab as
+    * the round state; both returned frames read pins (merges the
+    * per-round 1-row argmaxes, vocab the last round), and each caller
+    * frees the one it does not read. */
   private[graft] def bpeTrainRounds(docs: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
     val sep = "|"
     val wordCounts = WordCount.tokens(docs)
@@ -997,15 +1004,15 @@ object TextAnalysis {
     // per-CODE-POINT symbols (substr counts code points in both
     // engines); split-on-empty-pattern is avoided — it keeps a
     // trailing empty in Spark's limit=-1 semantics
-    var vocab = wordCounts.select(col("word"), col("w_cnt"),
+    val vocab0 = wordCounts.select(col("word"), col("w_cnt"),
       concat(lit(sep),
         array_join(transform(sequence(lit(1), length(col("word"))),
           i => col("word").substr(i, lit(1))), sep + sep),
         lit(sep)).as("seq"))
       .pinned
     def syms = split(trim(col("seq"), sep), "\\|\\|")
-    var merges: DataFrame = null
-    for (step <- 1 to rounds) {
+    val merges = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def merge(vocab: DataFrame, step: Int): DataFrame = {
       val pairs = vocab
         .select(col("w_cnt"),
           explode(zip_with(
@@ -1020,11 +1027,12 @@ object TextAnalysis {
         .select(lit(step.toLong).as("step"), col("merge_left"),
           col("merge_right"), col("pair_count"))
         .pinned
+      merges += best
       // LEFT join, not cross: when training exhausts early (best is
       // EMPTY — every word already one symbol), the vocab must survive
       // unchanged so the learned segmentation stays usable
       // ([[bpeLearnedTokens]]); a cross join would zero it
-      vocab = vocab.join(broadcast(best), lit(true), "left")
+      vocab.join(broadcast(best), lit(true), "left")
         .select(col("word"), col("w_cnt"),
           when(col("merge_left").isNull, col("seq"))
             .otherwise(call_function("replace", col("seq"),
@@ -1032,10 +1040,11 @@ object TextAnalysis {
                 col("merge_right"), lit(sep)),
               concat(lit(sep), col("merge_left"), col("merge_right"), lit(sep))))
             .as("seq"))
-        .pinned
-      merges = if (merges == null) best else merges.unionAll(best)
     }
-    (merges, vocab)
+    // the last merge is the kernel's finish, so the final vocab is
+    // pinned once, as every earlier round is
+    val vocab = Pin.rounds("text_bpe_train", vocab0, rounds - 1)(merge)(merge(_, rounds))
+    (merges.reduce(_ unionAll _), vocab)
   }
 
   /** LEARNED-vocabulary tokenization (`text_bpe_learned`, r10) — the
@@ -1062,7 +1071,8 @@ object TextAnalysis {
     * All-integer ⇒ engine-exact; the oracle chains the 8 train-round
     * CTEs into the same per-word stats. */
   def bpeLearnedTokens(docs: DataFrame): DataFrame = {
-    val vocab = bpeTrainRounds(docs, BpeTrainMerges)._2
+    val (merges, vocab) = bpeTrainRounds(docs, BpeTrainMerges)
+    graft.Cleanup.freePins(merges)
     val syms = split(trim(col("seq"), "|"), "\\|\\|")
     val stats = vocab.select(col("word"),
       size(syms).cast("long").as("n_sub"),
@@ -1211,9 +1221,9 @@ object TextAnalysis {
     * Scale shape: the classic iterative join-agg graph pattern
     * ([[Dedup.connectedComponents]]'s family) — per epoch ONE hash join
     * of the edge list against the (word, rank) frame + one
-    * combiner-friendly in-sum shuffle; edges/nodes persist across
-    * epochs (released via the [[graft.Cleanup.releaseAll]] contract);
-    * epochs are fixed and small, lineage stays bounded. Vocabulary is
+    * combiner-friendly in-sum shuffle; edges/nodes are pinned once
+    * and freed once the ranks are; the fixed epochs run through
+    * [[graft.Pin.rounds]], so lineage stays bounded. Vocabulary is
     * the node set — Zipf-bounded, orders of magnitude below corpus
     * size. */
   def textRank(docs: DataFrame): DataFrame = {
@@ -1223,25 +1233,26 @@ object TextAnalysis {
         explode(zip_with(slice(ws, lit(1), n1), slice(ws, lit(2), n1),
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
-    val edges = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("wgt")).persist()
+    val edges = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("wgt")).pinned
     val out = edges.groupBy("w1").agg(sum("wgt").as("out_w"))
     val nodes = edges.select(col("w1").as("word"))
-      .union(edges.select(col("w2").as("word"))).distinct().persist()
-    var rank = nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("n_nodes"))))
+      .union(edges.select(col("w2").as("word"))).distinct().pinned
+    val rank0 = nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("n_nodes"))))
       .select(col("word"), round(lit(1.0) / col("n_nodes"), 10).as("rank"))
-    for (_ <- 1 to PrIters) {
+    val res = Pin.rounds("text_textrank", rank0, PrIters) { (rank, _) =>
       val contrib = edges.join(out, "w1")
         .join(rank.withColumnRenamed("word", "w1"), "w1")
         .select(col("w2").as("word"),
           round(col("rank") * col("wgt") / col("out_w"), 10).as("c"))
       val inSum = contrib.groupBy("word")
         .agg(sum(col("c").cast(DecimalType(28, 10))).cast(DoubleType).as("in_sum"))
-      rank = nodes.join(inSum, Seq("word"), "left")
+      nodes.join(inSum, Seq("word"), "left")
         .select(col("word"),
           round(lit(0.15) + lit(0.85) * coalesce(col("in_sum"), lit(0.0)), 10)
             .as("rank"))
-    }
-    rank.orderBy("word")
+    }(_.orderBy("word"))
+    Seq(edges, nodes).foreach(graft.Cleanup.freeCheckpoint)
+    res
   }
 
   val LmTrainPct = 80       // bigram LM: train split percentage

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * filter (the benchmark set is tiny by definition — it stays pinned to
   * the ORIGINAL corpus slice, as an external eval file would be); stage
   * 5 is one md5 shuffle; stage 6 inherits the bounded LSH-band topology
-  * of [[Dedup.minhashClustersLS]].
+  * of [[Dedup.minhashClusters]].
   */
 object TrainingPipeline {
 
@@ -37,14 +37,14 @@ object TrainingPipeline {
 
   /** Labelled stage outputs, in pipeline order. Intermediate stages are
     * persisted: every later stage AND the per-stage counts re-read them,
-    * and stage 4's clustering loop alone would otherwise re-derive the
-    * whole prefix several times (the frames are id-plus-doc-columns at
+    * and the clustering stage's candidate pass would otherwise re-derive
+    * the whole prefix (the frames are id-plus-doc-columns at
     * post-filter cardinality, a fraction of the input).
     *
-    * CALLER-MUST-CLEAR contract (same as [[Dedup.minhashClusters]]): the
-    * persisted intermediates (and the clustering stage's internal label
-    * cache) stay resident so the returned lazy frames can be consumed
-    * any number of times. A long-lived session composing several corpus
+    * CALLER-MUST-CLEAR contract: the persisted intermediates (and the
+    * clustering stage's pinned component roots, as
+    * [[Dedup.minhashClusters]] leaves them) stay resident so the
+    * returned lazy frames can be consumed any number of times. A long-lived session composing several corpus
     * builds releases them between builds with [[release]] (or
     * [[graft.Cleanup.releaseAll]], which Verify/Bench use between
     * queries). */
@@ -62,8 +62,7 @@ object TrainingPipeline {
     // vs the ~0.9× filtered s2) and every consumer — s1's count, s2's
     // three downstream readers — is a cheap filter+project over the
     // cached columns. Internal cache, released by the session-level
-    // [[graft.Cleanup.releaseAll]] contract (the clustering stage's
-    // label cache precedent).
+    // [[graft.Cleanup.releaseAll]] contract.
     val flagged = docs
       .withColumn("g_lang_ok", TextAnalysis.langAgreeCol)
       .withColumn("g_qual_ok", TextAnalysis.qualityScoreCol >= QualityMin)
@@ -95,13 +94,11 @@ object TrainingPipeline {
       Dedup.exact(s4).where(col("doc_id") === col("keep_id")).select("doc_id"), "doc_id")
       .persist()
     // large-star/small-star clustering: per-round work is EDGE-sized
-    // (candidate pairs), unlike label propagation whose every round
-    // re-joins the full corpus-sized label table — at 100 TB that is the
-    // difference between iterating on a few-million-row pair set and on
-    // the corpus. Same fixpoint (both implementations share the
-    // dedup_cluster oracle).
+    // (candidate pairs), never the corpus-sized label table — at 100 TB
+    // that is the difference between iterating on a few-million-row
+    // pair set and on the corpus.
     val s6 = s5.join(
-      Dedup.minhashClustersLS(s5).where(col("is_canonical") === 1).select("doc_id"), "doc_id")
+      Dedup.minhashClusters(s5).where(col("is_canonical") === 1).select("doc_id"), "doc_id")
     Seq("p0_input" -> docs, "p1_langid" -> s1, "p2_quality" -> s2,
       "p3_gopher" -> s3, "p4_decontam" -> s4, "p5_exact" -> s5,
       "p6_neardup" -> s6)

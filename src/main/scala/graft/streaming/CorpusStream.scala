@@ -73,7 +73,7 @@ object CorpusStream {
   /** Seed the stored cluster labels from the existing corpus, as version
     * `v_-1` of the crash-consistent label layout (see [[readLabels]]). */
   def seedLabels(existing: DataFrame, labelsPath: String): Unit =
-    Dedup.minhashClustersLS(existing).write
+    Dedup.minhashClusters(existing).write
       .mode(SaveMode.Overwrite).parquet(s"$labelsPath/v_-1")
 
   /** Latest COMMITTED label version. The labels table is rewritten whole

@@ -228,7 +228,7 @@ class CorpusStreamSpec extends SparkSpec {
     val got = CorpusStream.readLabels(spark, labelsPath)
       .select("doc_id", "cluster_id", "is_canonical")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val want = Dedup.minhashClustersLS(docs)
+    val want = Dedup.minhashClusters(docs)
       .select("doc_id", "cluster_id", "is_canonical")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == want,
@@ -275,7 +275,7 @@ class CorpusStreamSpec extends SparkSpec {
     assert(got.values.forall(_ == 1), "duplicate pair rows after single delivery")
     CorpusStream.semanticBatch(b1, 1L, cents, idx, prs) // the failure-replay
     assert(pairs() == got, "replayed batch changed the semantic pair set")
-    Cleanup.releaseAll(spark) // trainCodebook's caller-must-clear
+    Cleanup.releaseAll(spark) // the pinned codebook and the stream's caches
   }
 
   test("corpus refresh survives a real kill-and-restart: checkpointed query resumes and converges") {
@@ -391,7 +391,7 @@ class CorpusStreamSpec extends SparkSpec {
     val gotLbl = CorpusStream.readLabels(spark, lbl)
       .select("doc_id", "cluster_id", "is_canonical")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val wantLbl = Dedup.minhashClustersLS(docs)
+    val wantLbl = Dedup.minhashClusters(docs)
       .select("doc_id", "cluster_id", "is_canonical")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(gotLbl == wantLbl,
@@ -418,7 +418,7 @@ class CorpusStreamSpec extends SparkSpec {
     // band index holds exactly one row per (doc, band) after the replays
     assert(spark.read.parquet(idx).groupBy("doc_id", "band").count()
       .where(col("count") > 1).count() == 0, "restart duplicated index rows")
-    Cleanup.releaseAll(spark) // trainCodebook's caller-must-clear
+    Cleanup.releaseAll(spark) // the pinned codebook and the stream's caches
   }
 
   test("corpus refresh is restart-idempotent: a replayed micro-batch changes nothing") {

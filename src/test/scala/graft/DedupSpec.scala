@@ -200,10 +200,29 @@ class DedupSpec extends SparkSpec {
     assert(badMin.count() == 0)
   }
 
-  test("large-star/small-star clustering agrees with label propagation on the corpus") {
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
+  test("minhashClusters agrees with a driver-side BFS closure of the candidate pairs") {
+    // an independent reference: components by breadth-first search over
+    // the collected pair graph, each labelled with its minimum doc_id
+    val ids = docs.select("doc_id").collect().map(_.getLong(0))
+    val adj = Dedup.minhashPairs(docs).collect()
+      .flatMap(r => Seq(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0)))
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    assert(adj.nonEmpty, "fixture has no candidate pairs to cluster")
+    val label = scala.collection.mutable.Map.empty[Long, Long]
+    for (start <- ids.sorted if !label.contains(start)) {
+      // ids ascend, so the first unlabelled id is its component's min
+      label(start) = start
+      val queue = scala.collection.mutable.Queue(start)
+      while (queue.nonEmpty)
+        for (n <- adj.getOrElse(queue.dequeue(), Array.empty[Long]) if !label.contains(n)) {
+          label(n) = start
+          queue.enqueue(n)
+        }
+    }
+    val want = label.map { case (d, c) => (d, c, if (d == c) 1L else 0L) }.toSet
+    val got = Dedup.minhashClusters(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(key(Dedup.minhashClustersLS(docs)) == key(Dedup.minhashClusters(docs)))
+    assert(got == want, s"missing=${want -- got} extra=${got -- want}")
   }
 
   test("large-star/small-star collapses a long CHAIN — the adversarial-diameter case") {

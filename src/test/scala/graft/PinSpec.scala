@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * actually writes lineage-free checkpoint files into the configured
   * directory (what survives an executor loss). Also pins the
   * [[Pin.rounds]] release contract: its operators leave only the
-  * returned frame behind. */
+  * returned frame behind, and so do the other operators that free their
+  * own storage. */
 class PinSpec extends SparkSpec {
 
   private def edges = {
@@ -25,6 +26,24 @@ class PinSpec extends SparkSpec {
     (1L to 3L).union(Seq(10L, 11L)).union(20L to 23L)
       .toDF("doc_id")
   }
+
+  /** The persistent RDDs `op` makes that remain once its result is
+    * collected and `free`d. */
+  private def newRdds(op: () => DataFrame)(free: DataFrame => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val res = op()
+    res.collect()
+    free(res)
+    sc.getPersistentRDDs.keys.filterNot(before).toSeq.sorted
+  }
+
+  /** One message per operator in `ops` that leaves RDDs behind. */
+  private def leaksOf(ops: Seq[(String, () => DataFrame)])(free: DataFrame => Unit): Seq[String] =
+    ops.flatMap { case (name, op) =>
+      val left = newRdds(op)(free)
+      if (left.isEmpty) None else Some(s"$name left RDDs ${left.mkString(",")}")
+    }
 
   test("pin: local and reliable checkpointing agree on an iterative operator") {
     val docs = Tables.documents(spark, sf)
@@ -67,18 +86,7 @@ class PinSpec extends SparkSpec {
       "ann_graph_search" -> (() => Similarity.graphSearch(em)),
       "ann_graph_search_pq" -> (() => Similarity.graphSearchPqWith(em, cents)),
       "text_train" -> (() => TextAnalysis.trainClassifier(docs)))
-    val sc = spark.sparkContext
-    def newRdds(op: () => DataFrame, free: Boolean): Seq[Int] = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val res = op()
-      res.collect()
-      if (free) Cleanup.freeCheckpoint(res)
-      sc.getPersistentRDDs.keys.filterNot(before).toSeq.sorted
-    }
-    val leaks = ops.flatMap { case (name, op) =>
-      val left = newRdds(op, free = true)
-      if (left.isEmpty) None else Some(s"$name left RDDs ${left.mkString(",")}")
-    }
+    val leaks = leaksOf(ops)(Cleanup.freeCheckpoint)
     assert(leaks.isEmpty, leaks.mkString("; "))
     // wc_bfs_rec's temp views read its freed token base: none may remain
     val views = spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("g47_"))
@@ -86,9 +94,27 @@ class PinSpec extends SparkSpec {
     // connectedComponents frees its edge rounds on both paths: only the
     // pinned roots behind its (lazy) result remain
     for (bound <- Seq(-1L, Long.MaxValue)) {
-      val left = newRdds(() => Dedup.connectedComponents(nodes, edges, bound), free = false)
+      val left = newRdds(() => Dedup.connectedComponents(nodes, edges, bound))(_ => ())
       assert(left.size == 1, s"connectedComponents (bound $bound) left RDDs ${left.mkString(",")}")
     }
+  }
+
+  test("pin: operators that own their storage give it all back once the result is freed") {
+    // each operator frees its own intermediates; the caller's one free
+    // of the returned frame's pins must leave nothing it made behind
+    Cleanup.releaseAll(spark)
+    val docs = Tables.documents(spark, sf)
+    val em = Tables.embeddings(spark, sf)
+    val ops = Seq[(String, () => DataFrame)](
+      "dedup_cluster" -> (() => Dedup.minhashClusters(docs)),
+      "text_textrank" -> (() => TextAnalysis.textRank(docs)),
+      "text_bpe_train" -> (() => TextAnalysis.bpeTrain(docs)),
+      "text_bpe_learned" -> (() => TextAnalysis.bpeLearnedTokens(docs)),
+      "trainCodebook" -> (() => Similarity.trainCodebook(em)),
+      "nnDescentEdges(alpha)" ->
+        (() => Similarity.nnDescentEdges(em, Similarity.KnnK, Some(Similarity.AlphaDefault))))
+    val leaks = leaksOf(ops)(Cleanup.freePins)
+    assert(leaks.isEmpty, leaks.mkString("; "))
   }
 
   test("pin: default path truncates lineage (plan is a scan, not the producing query)") {

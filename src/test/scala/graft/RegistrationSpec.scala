@@ -45,7 +45,7 @@ class RegistrationSpec extends SparkSpec {
     val pairs = semanticPairs(spark.newSession())
     assert(pairs.nonEmpty, "fixture too sparse: no semantic pairs")
     assert(pairs == semanticPairs(spark), "semanticBatch: fresh-session pairs differ")
-    Cleanup.releaseAll(spark) // trainCodebook's caller-must-clear
+    Cleanup.releaseAll(spark) // the pinned codebooks
   }
 
   test("GraftExtensions alone wires the strategy and the SQL names; setup adds nothing") {
